@@ -29,6 +29,7 @@ broadcast with the task binary), never via driver round-trips per task.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,17 +63,12 @@ def embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def deterministic_init(points: DataFrame, k: int = DEFAULT_K) -> DataFrame:
-    """R3 — k initial centroids, reproducibly.
-
-    ``orderBy(md5(vec_id)).limit(k)`` plans as TakeOrderedAndProject — a
-    per-partition top-k plus a k-row driver merge, one distributed pass.
-    The reference needs two full single-threaded scans
-    (``KMeans.java:33-100``). Output: (cluster_id 0..k-1, vec_id, emb),
-    cluster index assigned in md5 order so DuckDB reproduces it exactly.
+    """R3 — k initial centroids, reproducibly: the :func:`md5_seed_rows`
+    k-sample, one distributed pass where the reference needs two full
+    single-threaded scans (``KMeans.java:33-100``). Output: (cluster_id
+    0..k-1, vec_id, emb), cluster index assigned in md5 order so DuckDB
+    reproduces it exactly.
     """
-    ordered = points.select(
-        "vec_id", "emb", stable_order_key("vec_id").alias("h")
-    ).orderBy("h", "vec_id").limit(k)
     # The 0..k-1 cluster index is assigned driver-side over the k
     # collected rows (an R11-style k-row collect — every consumer
     # collects these centroids anyway, so job count is unchanged). The
@@ -82,7 +78,7 @@ def deterministic_init(points: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     # constant-folds away any literal partition spec that would silence
     # it. The returned LocalRelation broadcasts for free in downstream
     # k-row joins (convergence_delta).
-    rows = ordered.collect()
+    rows = md5_seed_rows(points, k)
     spark = points.sparkSession
     fields = {f.name: f.dataType.simpleString() for f in points.schema.fields}
     return local_rows_df(spark, 
@@ -283,9 +279,7 @@ def lloyd(
     (``KMeans.java:102-111``). Differences (SURVEY §2.1): correctly
     weighted partial aggregation (R8) and deterministic init (R3).
     Empty clusters keep their previous centroid (``KMeans.java:129-144``).
-
-    ``points`` should be cached by the caller when iterating (the reference
-    re-reads its input file every iteration; we scan the cached DataFrame).
+    The loop itself is :func:`fold_loop`.
     """
     cents = (
         init_cents
@@ -297,39 +291,65 @@ def lloyd(
             f"k={k} exceeds the {len(cents)} distinct input points; "
             f"reduce k or supply more points"
         )
-    blocks = _numpy_blocks(points)
-    # Caching pays off only when the loop re-reads the blocks across
-    # per-iteration jobs; the one-partition path runs exactly one job.
-    cache = blocks.getNumPartitions() > 1
-    if cache:
-        blocks = blocks.cache()
-    try:
-        cents, history, converged, it = _iterate(
-            blocks, cents, k, max_iter, tol
-        )
-    finally:
-        if cache:
-            blocks.unpersist()
-    return LloydResult(cents, it, converged, history)
+    import numpy as np
+
+    C, history, converged, it = fold_loop(
+        _numpy_blocks(points),
+        np.array(cents, dtype=np.float64),
+        _block_partials,
+        partial(_advance, tol=tol),
+        max_iter,
+    )
+    return LloydResult(C.tolist(), it, converged, history)
+
+
+def md5_seed_rows(points: DataFrame, k: int) -> list:
+    """The k md5-smallest ``(vec_id, emb)`` rows of ``points`` in md5
+    order — the deterministic k-sample both k-means and PQ seed from.
+    ``orderBy(md5(vec_id)).limit(k)`` plans as TakeOrderedAndProject: a
+    per-partition top-k plus a k-row driver merge, one job."""
+    return (
+        points.select("vec_id", "emb", stable_order_key("vec_id").alias("h"))
+        .orderBy("h", "vec_id")
+        .limit(k)
+        .collect()
+    )
+
+
+def arrow_blocks(batches):
+    """Decode ``(vec_id, emb)`` Arrow record batches into ``(ids, X)``
+    numpy pairs, skipping empty batches: int64 ids and the batch's flat
+    ``list<double>`` buffer reshaped into the (n, d) float64 matrix —
+    no per-row Python objects."""
+    import numpy as np
+
+    for batch in batches:
+        n = batch.num_rows
+        if not n:
+            continue
+        ids = batch.column(0).to_numpy(zero_copy_only=False)
+        ids = np.ascontiguousarray(ids, dtype=np.int64)
+        # list<double> → offset-aware flat values → (n, d) matrix
+        flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
+        yield ids, np.ascontiguousarray(flat, dtype=np.float64).reshape(n, -1)
 
 
 def _numpy_blocks(points: DataFrame):
-    """The hot-loop representation: (ids, X) numpy blocks. Built once per
-    ``lloyd`` call and cached — the same row-major matrix blocking MLlib
-    uses for its Lloyd loop.
+    """The hot-loop representation: (ids, X) numpy blocks, one per Arrow
+    batch — the same row-major matrix blocking MLlib uses for its Lloyd
+    loop.
 
     The build is columnar end-to-end: ``mapInArrow`` delivers Arrow
-    record batches to the Python worker (no per-row Row objects), the
-    batch's flat ``list<double>`` buffer reshapes straight into the
-    (n, d) float64 matrix, and each block travels back to the RDD side
-    as ONE row holding two binary blobs — so the only per-row pickling
-    left is one tuple per ~10k-row batch, not one per point. At 100 TB
-    this is the difference between an Arrow memcpy pass and paying
-    Python deserialization for every input row.
+    record batches to the Python worker (no per-row Row objects),
+    :func:`arrow_blocks` reshapes each into its (n, d) matrix, and each
+    block travels back to the RDD side as ONE row holding two binary
+    blobs — so the only per-row pickling left is one tuple per ~10k-row
+    batch, not one per point. At 100 TB this is the difference between
+    an Arrow memcpy pass and paying Python deserialization for every
+    input row.
     """
 
     def pack(batches):
-        import numpy as np
         import pyarrow as pa
 
         out_schema = pa.schema(
@@ -340,20 +360,12 @@ def _numpy_blocks(points: DataFrame):
                 pa.field("d", pa.int64()),
             ]
         )
-        for batch in batches:
-            n = batch.num_rows
-            if not n:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            ids = np.ascontiguousarray(ids, dtype=np.int64)
-            # list<double> → offset-aware flat values → (n, d) matrix
-            flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            X = np.ascontiguousarray(flat, dtype=np.float64).reshape(n, -1)
+        for ids, X in arrow_blocks(batches):
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array([ids.tobytes()], type=pa.binary()),
                     pa.array([X.tobytes()], type=pa.binary()),
-                    pa.array([n], type=pa.int64()),
+                    pa.array([X.shape[0]], type=pa.int64()),
                     pa.array([X.shape[1]], type=pa.int64()),
                 ],
                 schema=out_schema,
@@ -374,10 +386,8 @@ def _numpy_blocks(points: DataFrame):
 
 def _block_partials(X, C):
     """Per-block Lloyd partials: (k×d sums, k counts) of the nearest-
-    centroid assignment of ``X`` against ``C``. The ONE copy of the
-    iteration math — both the distributed per-iteration jobs and the
-    single-task loop call this, so their arithmetic is identical by
-    construction.
+    centroid assignment of ``X`` against ``C`` — the k-means
+    ``partials`` of :func:`fold_loop`.
 
     Exactness: squared-L2 accumulates per-dimension (``acc += d*d`` one
     dimension at a time), bit-identical to the sequential HOF fold in
@@ -407,9 +417,11 @@ def _block_partials(X, C):
 
 
 def _advance(C, sums, counts, tol):
-    """One centroid update step: empty clusters keep the previous
-    centroid (``KMeans.java:129-144``); movement is the max per-coordinate
-    abs delta (``KMeans.java:102-111``). Shared by both loop drivers."""
+    """One centroid update step over any ``(..., d)`` centroid array whose
+    leading axes match ``counts``: empty cells keep the previous centroid
+    (``KMeans.java:129-144``); movement is the max per-coordinate abs
+    delta (``KMeans.java:102-111``), done once it is below ``tol`` — so
+    ``tol=0`` never stops early."""
     import numpy as np
 
     new = C.copy()  # empty clusters keep the previous centroid
@@ -419,99 +431,96 @@ def _advance(C, sums, counts, tol):
     return new, move, move < tol
 
 
-def _loop_over_blocks(blks, C, max_iter, tol):
-    """The Lloyd loop over an in-memory list of (ids, X) blocks — the
-    single-partition body. Partials fold left in block order, exactly the
-    order a one-partition ``treeReduce`` folds its per-block results, so
-    the centroids are bit-identical to the distributed path's."""
+def _add_partials(x, y):
+    return x[0] + y[0], x[1] + y[1]
+
+
+def _run_loop(reduce_step, state, advance, max_iter):
+    """Iterate ``reduce_step`` → ``advance`` up to ``max_iter`` times."""
     history: list[float] = []
     converged = False
     it = 0
     for it in range(1, max_iter + 1):
-        sums = counts = None
-        for _ids, X in blks:
-            s, c = _block_partials(X, C)
-            if sums is None:
-                sums, counts = s, c
-            else:
-                sums = sums + s
-                counts = counts + c
-        if sums is None:
-            raise ValueError("empty input: no blocks to iterate over")
-        C, move, done = _advance(C, sums, counts, tol)
+        sums, counts = reduce_step(state)
+        state, move, done = advance(state, sums, counts)
         history.append(move)
         if done:
             converged = True
             break
-    return C, history, converged, it
+    return state, history, converged, it
 
 
-def _iterate(blocks, cents, k, max_iter, tol):
-    """The per-iteration engine: broadcast C, one ``treeReduce`` of
-    (k×d sums, k counts) per iteration — the map→combine→shuffle→reduce
-    of ``KMeans.java:207-215`` with nothing but the k×(d+1) partial
-    aggregates crossing the wire (depth-2 tree merge = the 1000-executor
-    shape, exactly MLlib's ``RDD.treeAggregate`` strategy).
+def fold_loop(blocks, state, partials, advance, max_iter):
+    """The Lloyd fold driver — the map → combine → reduce iteration of
+    ``KMeans.java:204-234`` over an RDD of ``(ids, X)`` numpy blocks,
+    shared by k-means (:func:`lloyd`) and PQ codebook training.
 
-    Why RDD and not the DataFrame agg here: the declared one-step
-    operators (``assign_nearest``/``centroid_update``) keep the
-    declarative plan, but a *driver loop* re-analyzes that plan every
-    iteration — measured ~208 ms of Catalyst analysis per iteration at
-    fixture scale (the centroid literal changes, so nothing is reused)
-    plus ~250 ms interpreted-HOF execution, ≈0.45 s/iter. The numpy
-    block path runs the identical math vectorized with zero per-
-    iteration planning: ≈0.21 s/iter measured, same assignments
-    (0 mismatches over 20 iterations at sf0.1).
+    Each iteration folds ``partials(X, state) -> (sums, counts)`` over
+    every block, then ``advance(state, sums, counts) -> (state, move,
+    done)``; returns ``(state, history, converged, iterations)`` with
+    ``history`` the per-iteration ``move``.
 
-    Adaptive single-task fold: when ``blocks`` has ONE partition, every
-    per-iteration job is a one-task job whose reduce is just that
+    Why RDD and not the DataFrame agg: the declared one-step operators
+    (``assign_nearest``/``centroid_update``) keep the declarative plan,
+    but a *driver loop* re-analyzes that plan every iteration —
+    measured ~208 ms of Catalyst analysis per iteration at fixture
+    scale (the centroid literal changes, so nothing is reused) plus
+    ~250 ms interpreted-HOF execution, ≈0.45 s/iter. The numpy block
+    path runs the identical math vectorized with zero per-iteration
+    planning: ≈0.21 s/iter measured, same assignments (0 mismatches
+    over 20 iterations at sf0.1).
+
+    Single-task fold: when ``blocks`` has ONE partition, every
+    per-iteration job would be a one-task job whose reduce is just that
     partition's left fold — so the whole loop runs inside a single task
-    (``mapPartitions`` over the same blocks, same ``_block_partials`` /
-    ``_advance`` math, same fold order → bit-identical centroids),
-    turning up-to-20 jobs into 1. This build's Python-task floor is
-    ~150 ms/job regardless of work, so the collapse is worth ~3 s at
-    fixture scale; on production inputs (many partitions) the
-    distributed per-iteration loop below runs unchanged.
+    (same partials, same fold order → bit-identical state), turning
+    up-to-``max_iter`` jobs into 1. This build's Python-task floor is
+    ~150 ms/job regardless of work.
+
+    Otherwise the blocks are cached for the loop (unless the caller
+    already cached them), and each iteration broadcasts the state and
+    runs one ``treeReduce`` of the partials — nothing but the bounded
+    partial aggregates crosses the wire, exactly MLlib's
+    ``RDD.treeAggregate`` strategy. Tree depth is 1 up to 64 partitions
+    and 2 above: a depth-2 merge bounds driver fan-in at ~sqrt(P) for
+    the 1000-executor case; below that one reduce suffices (measured
+    equivalent at fixture scale, where the loop is bounded by per-job
+    scheduling latency, not by the merge).
     """
-    import numpy as np
-
-    sc = blocks.context
-    C = np.array(cents, dtype=np.float64)
-    k_, dim = C.shape
-    history: list[float] = []
-    converged = False
-    it = 0
     if blocks.getNumPartitions() == 1:
-        max_iter_, tol_ = max_iter, tol
 
-        def run(parts_iter):
-            yield _loop_over_blocks(list(parts_iter), C, max_iter_, tol_)
+        def run(parts):
+            Xs = [X for _ids, X in parts]
 
-        C, history, converged, it = blocks.mapPartitions(run).collect()[0]
-        return [list(map(float, c)) for c in C], history, converged, it
-    # tree depth scales with partition count like MLlib's treeAggregate:
-    # a depth-2 merge bounds driver fan-in at ~sqrt(P) for the
-    # 1000-executor case; below ~64 partitions a single reduce suffices
-    # (measured equivalent at fixture scale — the loop there is bounded
-    # by per-job scheduling latency, ~0.2 s/iter, not by the merge)
+            def step(st):
+                if not Xs:
+                    raise ValueError("empty input: no blocks to fold over")
+                return reduce(_add_partials, (partials(X, st) for X in Xs))
+
+            yield _run_loop(step, state, advance, max_iter)
+
+        return blocks.mapPartitions(run).collect()[0]
+
     depth = 1 if blocks.getNumPartitions() <= 64 else 2
-    for it in range(1, max_iter + 1):
-        bc = sc.broadcast(C)
+    sc = blocks.context
 
-        def part(block):
-            _ids, X = block
-            return _block_partials(X, bc.value)
+    def step(st):
+        bc = sc.broadcast(st)
+        try:
+            return blocks.map(lambda b: partials(b[1], bc.value)).treeReduce(
+                _add_partials, depth=depth
+            )
+        finally:
+            bc.unpersist()
 
-        sums, counts = blocks.map(part).treeReduce(
-            lambda x, y: (x[0] + y[0], x[1] + y[1]), depth=depth
-        )
-        bc.unpersist()
-        C, move, done = _advance(C, sums, counts, tol)
-        history.append(move)
-        if done:
-            converged = True
-            break
-    return [list(map(float, c)) for c in C], history, converged, it
+    owned = not blocks.is_cached
+    if owned:
+        blocks.cache()
+    try:
+        return _run_loop(step, state, advance, max_iter)
+    finally:
+        if owned:
+            blocks.unpersist()
 
 
 def lloyd_assignments(
@@ -520,15 +529,11 @@ def lloyd_assignments(
     """End-to-end: run Lloyd's to convergence, return final per-point
     assignments + final centroids in long format (rows-only oracle —
     iterative, not single-statement SQL)."""
-    pts = embeddings(spark, sf_dir).cache()
-    try:
-        result = lloyd(pts, k, init_cents=init_centroids(spark, sf_dir, k))
-        assigned = assign(pts, result.centroids)
-        return assigned.select(
-            "vec_id",
-            "cluster_id",
-            F.lit(result.iterations).cast("bigint").alias("iterations"),
-            F.lit(result.converged).alias("converged"),
-        )
-    finally:
-        pts.unpersist()
+    pts = embeddings(spark, sf_dir)
+    result = lloyd(pts, k, init_cents=init_centroids(spark, sf_dir, k))
+    return assign(pts, result.centroids).select(
+        "vec_id",
+        "cluster_id",
+        F.lit(result.iterations).cast("bigint").alias("iterations"),
+        F.lit(result.converged).alias("converged"),
+    )

@@ -19,14 +19,16 @@ engine's ANN family as the compression tier: IVF prunes WHERE to look
 Spark mapping — deliberately the same shapes as the oracle-checked
 K-Means core, just M codebooks at once:
 
-- **training** is Lloyd over all M subspaces SIMULTANEOUSLY on the
-  ``kmeans._numpy_blocks`` hot-loop representation (Arrow-built
-  cached numpy blocks — MLlib's own strategy): per iteration, the
-  codebook array broadcasts with the closure and ONE ``treeReduce``
-  returns (m×k×ds sums, m×k counts) — centroid_update's bounded
-  combine payload times M, with zero per-iteration Catalyst planning;
-- **init** is the md5-deterministic k-sample (``deterministic_init``'s
-  ordering), so training is reproducible run to run with no RNG;
+- **training** is Lloyd over all M subspaces SIMULTANEOUSLY through
+  ``kmeans.fold_loop``, the fold driver k-means uses, on the same
+  ``kmeans._numpy_blocks`` representation (Arrow-built numpy blocks —
+  MLlib's own strategy): per iteration the (m, k, ds) codebook array
+  is broadcast and the (m×k×ds sums, m×k counts) partials fold back —
+  centroid_update's bounded combine payload times M, with zero
+  per-iteration Catalyst planning;
+- **init** is the md5-deterministic k-sample (``kmeans.md5_seed_rows``,
+  ``deterministic_init``'s ordering), so training is reproducible run
+  to run with no RNG;
 - **encoding** is one Arrow-batched ``mapInArrow`` pass over the same
   ``_codes_np`` kernel (no shuffle; why not a Catalyst expression:
   see the kernel's docstring — both expression forms measured badly);
@@ -41,10 +43,11 @@ K-Means core, just M codebooks at once:
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mapreducekmean_spark.functions.hashing import stable_order_key
 from mapreducekmean_spark.operators import kmeans as km
 
 from mapreducekmean_spark.session import local_rows_df
@@ -108,17 +111,13 @@ def train_pq_codebooks(
 ) -> list[list[list[float]]]:
     """Train the M codebooks: deterministic init (the k md5-smallest
     vectors, each sliced into its M subvectors — no RNG), then
-    ``iters`` simultaneous-subspace Lloyd passes. Returns
-    ``codebooks[sub][code] == list of d/m floats``."""
+    ``iters`` simultaneous-subspace Lloyd passes through
+    ``kmeans.fold_loop``. Returns ``codebooks[sub][code] == list of d/m
+    floats``."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     ds = dim // m
-    seed_rows = (
-        points.select("vec_id", "emb", stable_order_key("vec_id").alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(k)
-        .collect()
-    )
+    seed_rows = km.md5_seed_rows(points, k)
     if len(seed_rows) < k:
         raise ValueError(
             f"PQ training needs at least k={k} vectors, got {len(seed_rows)}"
@@ -131,53 +130,24 @@ def train_pq_codebooks(
         return codebooks
     import numpy as np
 
-    # the kmeans hot-loop representation: Arrow-built numpy blocks,
-    # cached once, then one treeReduce of (m×k×ds sums, m×k counts)
-    # per iteration — M codebooks' worth of centroid_update's bounded
-    # combine, with ZERO per-iteration planning (the per-iteration
-    # state is a broadcast numpy array, never a new Catalyst plan).
-    # Adaptive single-task fold (optimization r14 — the kmeans._iterate
-    # pattern): with ONE partition each per-iteration treeReduce is
-    # that partition's left fold, so the whole ``iters``-pass loop
-    # runs inside a single mapPartitions task — same _pq_block_partials
-    # kernel, same _pq_advance update, same block fold order →
-    # bit-identical codebooks; multi-partition (production) inputs run
-    # the distributed per-iteration loop unchanged.
-    blocks = km._numpy_blocks(points.select("vec_id", "emb"))
-    if blocks.getNumPartitions() == 1:
-        iters_, m_, k_, ds_ = iters, m, k, ds
-        cb0 = codebooks
-
-        def run(parts_iter):
-            yield _pq_loop_over_blocks(
-                list(parts_iter), cb0, iters_, m_, k_, ds_
-            )
-
-        return blocks.mapPartitions(run).collect()[0]
-    blocks = blocks.cache()
-    try:
-        for _ in range(iters):
-            cb = np.asarray(codebooks)  # (m, k, ds)
-
-            def part(block, cb=cb, m=m, k=k, ds=ds):
-                return _pq_block_partials(block[1], cb, m, k, ds)
-
-            sums, counts = blocks.map(part).treeReduce(
-                lambda a, b: (a[0] + b[0], a[1] + b[1])
-            )
-            codebooks = _pq_advance(codebooks, sums, counts, m, k)
-    finally:
-        blocks.unpersist()
-    return codebooks
+    # tol=0: the max movement is never negative, so every pass runs
+    cb, _history, _converged, _it = km.fold_loop(
+        km._numpy_blocks(points),
+        np.asarray(codebooks),
+        _pq_block_partials,
+        partial(km._advance, tol=0.0),
+        iters,
+    )
+    return cb.tolist()
 
 
-def _pq_block_partials(X, cb, m, k, ds):
-    """Per-block PQ-training partials: (m×k×ds sums, m×k counts) of
-    the per-subspace nearest-code assignment. The ONE copy of the
-    iteration math — shared by the distributed per-iteration jobs and
-    the single-task loop, so their arithmetic is identical."""
+def _pq_block_partials(X, cb):
+    """Per-block PQ-training partials against the (m, k, ds) codebook
+    array: (m×k×ds sums, m×k counts) of the per-subspace nearest-code
+    assignment — the PQ ``partials`` of ``kmeans.fold_loop``."""
     import numpy as np
 
+    m, k, ds = cb.shape
     codes = _codes_np(X, cb)
     sums = np.zeros((m, k, ds))
     counts = np.zeros((m, k), dtype=np.int64)
@@ -185,38 +155,6 @@ def _pq_block_partials(X, cb, m, k, ds):
         np.add.at(sums[s], codes[:, s], X[:, s * ds : (s + 1) * ds])
         np.add.at(counts[s], codes[:, s], 1)
     return sums, counts
-
-
-def _pq_advance(codebooks, sums, counts, m, k):
-    """One codebook update: empty cells keep their previous centroid.
-    Shared by both loop drivers."""
-    for s in range(m):
-        for c in range(k):
-            if counts[s, c]:
-                codebooks[s][c] = (sums[s, c] / counts[s, c]).tolist()
-    return codebooks
-
-
-def _pq_loop_over_blocks(blks, codebooks, iters, m, k, ds):
-    """The PQ training loop over an in-memory block list — the
-    single-partition body; partials fold left in block order, exactly
-    the order a one-partition treeReduce folds its per-block results."""
-    import numpy as np
-
-    for _ in range(iters):
-        cb = np.asarray(codebooks)
-        sums = counts = None
-        for _ids, X in blks:
-            s_, c_ = _pq_block_partials(X, cb, m, k, ds)
-            if sums is None:
-                sums, counts = s_, c_
-            else:
-                sums = sums + s_
-                counts = counts + c_
-        if sums is None:
-            raise ValueError("empty input: no blocks to train over")
-        codebooks = _pq_advance(codebooks, sums, counts, m, k)
-    return codebooks
 
 
 def pq_encode(
@@ -240,16 +178,7 @@ def pq_encode(
                 pa.field("codes", pa.list_(pa.int32())),
             ]
         )
-        for batch in batches:
-            n = batch.num_rows
-            if not n:
-                continue
-            ids = np.ascontiguousarray(
-                batch.column(0).to_numpy(zero_copy_only=False),
-                dtype=np.int64,
-            )
-            flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            X = np.ascontiguousarray(flat, dtype=np.float64).reshape(n, -1)
+        for ids, X in km.arrow_blocks(batches):
             codes = _codes_np(X, cb).astype(np.int32)
             yield pa.RecordBatch.from_arrays(
                 [

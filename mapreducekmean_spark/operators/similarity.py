@@ -382,7 +382,7 @@ def land_ivf_index_points(
     check); default is the deterministic k-sample over ``pts``.
 
     ``train_iters`` > 0 refines the quantizer with that many Lloyd
-    passes (``kmeans.lloyd``, the numpy-block treeReduce loop) before
+    passes (``kmeans.lloyd`` over the ``kmeans.fold_loop`` driver) before
     assignment. A raw k-sample Voronoi is fine on near-uniform
     fixtures, but real embedding corpora CLUSTER — untrained cells go
     badly skewed, and a skewed cell both breaks the nprobe/ncells

@@ -25,6 +25,7 @@ import shutil
 import sys
 import tempfile
 import time
+from functools import partial
 
 
 def probe_tmpdir(prefix: str) -> str:
@@ -4090,9 +4091,13 @@ def probe_core(spark, results: dict, args) -> None:
         "sec": round(dt, 2),
         "rows_per_sec": int(args.vecs / dt),
     }
-    km._iterate(blocks, cents, 10, 1, 0.0)  # warm
+    import numpy as np
+
+    C = np.array(cents, dtype=np.float64)
+    one_pass = partial(km._advance, tol=0.0)
+    km.fold_loop(blocks, C, km._block_partials, one_pass, 1)  # warm
     t0 = time.perf_counter()
-    km._iterate(blocks, cents, 10, 1, 0.0)  # tol=0 -> exactly 1 iteration
+    km.fold_loop(blocks, C, km._block_partials, one_pass, 1)  # 1 iteration
     dt = time.perf_counter() - t0
     blocks.unpersist()
     results["lloyd_iteration_block_loop"] = {

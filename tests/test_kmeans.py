@@ -93,6 +93,37 @@ def test_empty_cluster_keeps_previous_centroid(spark):
     assert not any(math.isnan(v) for c in new for v in c)
 
 
+@pytest.mark.parametrize("kernel", ["kmeans", "pq"])
+def test_fold_loop_multi_partition_matches_single_task(points, kernel):
+    """``fold_loop``'s distributed branch (cached blocks, broadcast
+    state, per-iteration treeReduce) folds the same partials in the same
+    order as its single-task branch: with one block per partition, the
+    state, history and iteration count are identical."""
+    from functools import partial
+
+    import numpy as np
+
+    from mapreducekmean_spark.operators import pq
+
+    if kernel == "kmeans":
+        cents = km.collect_centroids(km.deterministic_init(points, 10))
+        state = np.array(cents, dtype=np.float64)
+        partials, advance = km._block_partials, partial(km._advance, tol=1e-3)
+    else:
+        state = np.asarray(pq.train_pq_codebooks(points, 64, iters=0))
+        partials, advance = pq._pq_block_partials, partial(km._advance, tol=0.0)
+    blocks = km._numpy_blocks(points.repartition(3, "vec_id")).cache()
+    try:
+        assert blocks.getNumPartitions() == 3
+        multi = km.fold_loop(blocks, state, partials, advance, 6)
+        single = km.fold_loop(blocks.coalesce(1), state, partials, advance, 6)
+    finally:
+        blocks.unpersist()
+    assert multi[3] >= 1 and len(multi[1]) == multi[3]
+    assert multi[1:] == single[1:]
+    assert np.array_equal(multi[0], single[0])
+
+
 def test_golden_centroids_sf0001(points):
     """Seeded/deterministic run frozen into a golden file (SURVEY §5.5)."""
     result = km.lloyd(points, k=10)

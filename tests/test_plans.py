@@ -664,26 +664,25 @@ def test_dedup_apply_best_hash_agg_no_sort(spark, sf_small):
 def test_quality_deciles_level_table_only(spark, sf_small):
     """The decile calibration must do ALL its work on the distinct
     quality level table: one corpus aggregation, then only
-    level-table-sized operators — the two joins are the broadcast
-    10-row/1-row threshold attaches, never a corpus-volume side, and
+    level-table-sized operators — the decile of each level is closed
+    form over level-table windows, so there is no join at all, and
     there is no per-doc window (the single-partition window runs over
     the level table, bounded by the score's 6-dp precision)."""
     df = REG["quality_deciles"].fn(spark, sf_small)
-    assert count_joins(df) == 2
+    assert count_joins(df) == 0
     plan = _plan(df)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_host_stats_level_table_arithmetic(spark, sf_small):
     """The per-source report must aggregate the corpus ONCE to the
     (source, content_hash) level and do everything else on level
-    tables: exactly one join (level x corpus-count, both
-    distinct-content-sized — never a corpus-volume side), hash
+    tables: no join (the corpus-wide count per content is a window sum
+    over the level table, never a corpus-volume side), hash
     aggregates throughout (partial agg absorbs hot content groups
     map-side), no sort-based fallback."""
     df = REG["host_stats"].fn(spark, sf_small)
-    assert count_joins(df) == 1
+    assert count_joins(df) == 0
     plan = _plan(df)
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan
@@ -800,11 +799,11 @@ def test_video_dhash_real_is_map_only(spark, sf_small):
 
 def test_host_stats_delta_report_is_level_table_only(spark, sf_small):
     """The maintained report must read the landed snapshot (level
-    rows), never a corpus: exactly one join (the level x level dup
-    accounting), hash aggregates throughout — the host_stats pin
-    applied to the snapshot-backed variant."""
+    rows), never a corpus: no join (the dup accounting is a window sum
+    over the level rows), hash aggregates throughout — the host_stats
+    pin applied to the snapshot-backed variant."""
     df = REG["host_stats_delta"].fn(spark, sf_small)
-    assert count_joins(df) == 1
+    assert count_joins(df) == 0
     plan = _plan(df)
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan
@@ -826,11 +825,10 @@ def test_dataset_importance_broadcasts_bucket_ratios(spark, sf_small):
 
 def test_quality_deciles_delta_report_is_level_table_only(spark, sf_small):
     """The maintained decile report must read the landed LEVEL
-    snapshot, never a corpus — same join budget as the one-shot
-    (the two broadcast threshold attaches) with its window over the
-    snapshot levels."""
+    snapshot, never a corpus — no join, like the one-shot, with its
+    window over the snapshot levels."""
     df = REG["quality_deciles_delta"].fn(spark, sf_small)
-    assert count_joins(df) == 2
+    assert count_joins(df) == 0
     plan = _plan(df)
     assert "SortMergeJoin" not in plan
 
