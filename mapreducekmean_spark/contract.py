@@ -4512,7 +4512,7 @@ def _semantic_dedup_delta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = km.embeddings(spark, sf_dir).select("vec_id", "emb")
     (row,) = pts.agg(F.max("vec_id").alias("m")).collect()
     split = (int(row.m) + 1) // 2
-    cents = km.collect_centroids(km.deterministic_init(pts, km.DEFAULT_K))
+    cents = km.init_centroids(spark, sf_dir)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     path = _contract_index_dir(f"semdx_{tag}")
     if not os.path.exists(os.path.join(path, "centroids")):
@@ -6809,13 +6809,78 @@ def _queries_core() -> list[Query]:
 #: (tests/test_contract.py) are safest to land past any cutoff, so they go
 #: last.
 _CHECK_FIRST = (
-    # ROUND-15 ROTATION — GENERATED by
+    # ROUND-16 ROTATION — GENERATED by
     # scripts/rotate_window.py --write from
-    # CORRECTNESS_r01..r14 (verify with --check; pytest twin:
+    # CORRECTNESS_r01..r15 (verify with --check; pytest twin:
     # tests/test_contract.py::test_rotation_matches_generator). Rules in the
     # script docstring; carried overflow rides the
     # stale-list truncation mid-registry and leads the
-    # round-16 window.
+    # round-17 window.
+    "kmeans_mllib",
+    "sample_init_det",
+    "kmeans_full",
+    "kmeans_mllib_verdict",
+    "filter_valid",
+    "points_csv_scan",
+    "multimodal_checksums",
+    "sketch_cms",
+    "tpch_q15_top_supplier",
+    "sql_nation_balance",
+    "sql_above_nation_avg",
+    "orders_list_per_customer",
+    "running_spend",
+    "customer_rank_stats",
+    "events_asof_purchase",
+    "user_funnel",
+    "events_hourly",
+    "events_sessionize",
+    "corpus_stats",
+    "events_cube",
+    "events_time_rollup",
+    "events_pivot",
+    "events_hll_users",
+    "user_retention_cohorts",
+    "events_json_stats",
+    "tpch_q10_returns",
+    "tpch_q18_large_orders",
+    "tpch_q13_custdist",
+    "tpch_q16_supplier_cnt",
+    "dedup_edit_verify",
+    "ann_ivf_indexed",
+    "dedup_substring_spans",
+    "dedup_substring_apply",
+    "ann_ivfpq_indexed",
+    "host_stats",
+    "quality_deciles",
+    "image_dhash_real",
+    "scan_points",
+    "text_stats",
+    "dataset_mixture",
+    "dataset_mixture_temp",
+    "doc_repetition",
+    "pack_sequences",
+    "doc_winnow",
+    "token_count",
+    "lang_id",
+    "quality_score",
+    "doc_fingerprint",
+    "text_redact",
+    "dataset_split",
+)
+
+#: The deliberate cap-trade (see _CHECK_FIRST comment): declared
+#: queries left past the 50-entry window whose latest green value-hash
+#: row is in one of the last TWO driver artifacts — the bound the
+#: rotation tripwire (tests/test_contract.py) machine-checks. This
+#: round the list is EXACTLY the value-hash-green subset of the
+#: round-13 window (all 50 entries — the r13 window had no rows-only
+#: member): r13 stays within the bound both now (last two = r12/r13)
+#: and after the r14 artifact lands (last two = r13/r14), so the suite
+#: is green across the whole round. The carried r11/r12-green blocks
+#: are deliberately NOT listed (the r11 vintage would break the bound
+#: once r14 lands); they ride the stale-list truncation — see the
+#: mid-registry note in _CHECK_FIRST.
+_STALE_OK = (
     "tpch_q11_part_value",
     "tpch_q2_best_supplier",
     "tpch_q20_excess_volume",
@@ -6868,120 +6933,57 @@ _CHECK_FIRST = (
     "convergence_delta",
 )
 
-#: The deliberate cap-trade (see _CHECK_FIRST comment): declared
-#: queries left past the 50-entry window whose latest green value-hash
-#: row is in one of the last TWO driver artifacts — the bound the
-#: rotation tripwire (tests/test_contract.py) machine-checks. This
-#: round the list is EXACTLY the value-hash-green subset of the
-#: round-13 window (all 50 entries — the r13 window had no rows-only
-#: member): r13 stays within the bound both now (last two = r12/r13)
-#: and after the r14 artifact lands (last two = r13/r14), so the suite
-#: is green across the whole round. The carried r11/r12-green blocks
-#: are deliberately NOT listed (the r11 vintage would break the bound
-#: once r14 lands); they ride the stale-list truncation — see the
-#: mid-registry note in _CHECK_FIRST.
-_STALE_OK = (
-    "host_stats_delta",
-    "dataset_importance",
-    "quality_deciles_delta",
-    "corpus_diff",
-    "corpus_diff_delta",
-    "seq_len_histogram",
-    "embedding_stats",
-    "audio_fp_real",
-    "video_dhash_real",
-    "seq_len_histogram_delta",
-    "embedding_stats_delta",
-    "blocklist_filter",
-    "video_scene_cuts",
-    "audio_segments_real",
-    "bpe_fertility",
-    "ann_ivfpq_refined",
-    "ann_ivfpq_refined_recall",
-    "dedup_semantic",
-    "decontaminate_fuzzy",
-    "pq_adc_topk",
-    "hybrid_topk",
-    "rerank_topk",
-    "graph_triangles",
-    "graph_pagerank",
-    "graph_k_core",
-    "audio_fp_pairs",
-    "video_near_dup_pairs",
-    "dedup_lines_nl",
-    "ivfpq_cell_stats",
-    "events_gapfill",
-    "quality_unpivot",
-    "data_expectations",
-    "ivf_cell_stats",
-    "dedup_delta_indexed",
-    "budget_sample",
-    "pack_sequences_bpe",
-    "shuffle_export",
-    "domain_cap",
-    "scd2_history",
-    "ann_recall",
-    "doc_classifier",
-    "dedup_containment",
-    "curriculum_order",
-    "tpch_q17_small_qty",
-    "tpch_q22_idle_balance",
-    "tpch_q9_profit",
-    "tpch_q8_mkt_share",
-    "tpch_q12_late_priority",
-    "tpch_q21_waiting_supplier",
-)
-
 _CHECK_LAST = (
-    "host_stats_delta",
-    "dataset_importance",
-    "quality_deciles_delta",
-    "corpus_diff",
-    "corpus_diff_delta",
-    "seq_len_histogram",
-    "embedding_stats",
-    "audio_fp_real",
-    "video_dhash_real",
-    "seq_len_histogram_delta",
-    "embedding_stats_delta",
-    "blocklist_filter",
-    "video_scene_cuts",
-    "audio_segments_real",
-    "bpe_fertility",
-    "ann_ivfpq_refined",
-    "ann_ivfpq_refined_recall",
-    "dedup_semantic",
-    "decontaminate_fuzzy",
-    "pq_adc_topk",
-    "hybrid_topk",
-    "rerank_topk",
-    "graph_triangles",
-    "graph_pagerank",
-    "graph_k_core",
-    "audio_fp_pairs",
-    "video_near_dup_pairs",
-    "dedup_lines_nl",
-    "ivfpq_cell_stats",
-    "events_gapfill",
-    "quality_unpivot",
-    "data_expectations",
-    "ivf_cell_stats",
-    "dedup_delta_indexed",
-    "budget_sample",
-    "pack_sequences_bpe",
-    "shuffle_export",
-    "domain_cap",
-    "scd2_history",
-    "ann_recall",
-    "doc_classifier",
-    "dedup_containment",
-    "curriculum_order",
-    "tpch_q17_small_qty",
-    "tpch_q22_idle_balance",
-    "tpch_q9_profit",
-    "tpch_q8_mkt_share",
-    "tpch_q12_late_priority",
-    "tpch_q21_waiting_supplier",
+    "tpch_q11_part_value",
+    "tpch_q2_best_supplier",
+    "tpch_q20_excess_volume",
+    "multimodal_resize_plan",
+    "multimodal_frame_plan",
+    "decontaminate",
+    "ann_quantized",
+    "tpch_q3_top_orders",
+    "tpch_q5_regional_revenue",
+    "tpch_q1_pricing",
+    "embedding_quantize",
+    "dedup_embedding",
+    "ann_ivf",
+    "cosine_topk",
+    "ann_lsh",
+    "embedding_lsh_sig",
+    "dedup_clusters",
+    "dedup_minhash_sig",
+    "dedup_minhash",
+    "dedup_verify",
+    "dedup_simhash",
+    "ngram_jaccard",
+    "corpus_clean",
+    "doc_lm_coverage",
+    "word_count",
+    "bigram_lm",
+    "doc_chunk",
+    "domain_quality_filter",
+    "gopher_quality",
+    "dedup_apply_best",
+    "ann_refined_mcand_curve",
+    "bm25_index_stats",
+    "pii_scan",
+    "split_leakage_audit",
+    "dedup_semantic_delta",
+    "ann_pq_recall",
+    "ann_ivfpq_recall",
+    "events_anomaly_seasonal",
+    "agg_delta_maintenance",
+    "doc_top_terms",
+    "events_quantile_sketch",
+    "cdc_merge",
+    "bpe_token_stats",
+    "dedup_minhash_pairs",
+    "events_anomaly",
+    "assign_nearest",
+    "centroid_update",
+    "cluster_sizes",
+    "wssse",
+    "convergence_delta",
 )
 
 

@@ -45,11 +45,26 @@ from __future__ import annotations
 
 from functools import partial
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreducekmean_spark.operators import kmeans as km
-
+from mapreducekmean_spark.operators.similarity import (
+    N_PROBE,
+    N_QUERIES,
+    SEM_DUP_MAX_CELL,
+    _prefix_cut_curve,
+    _probe_cells,
+    _queries_and_points,
+    batch_tail_already_in_cells,
+    complete_swap,
+    l2_topk,
+    load_index_centroids,
+    recall_vs_exact,
+    save_index_centroids,
+    swap_table,
+    top_k_per_query,
+)
 from mapreducekmean_spark.session import local_rows_df
 
 #: Subspace count (d must divide evenly) and codes per subspace.
@@ -231,29 +246,14 @@ def pq_adc_score(
     of ``pts``, exact vectors) against an already-encoded corpus — the
     query-serving half of :func:`pq_adc_topk`, reusable against a
     persisted code table."""
-    from mapreducekmean_spark.operators.similarity import N_QUERIES
-
-    m = len(codebooks)
-    codes_k = len(codebooks[0])
-    ds = len(codebooks[0][0])
     q_rows = sorted(
         pts.filter(F.col("vec_id") < N_QUERIES).collect(),
         key=lambda r: r.vec_id,
     )
-    # one flat M*K table per query: lut[sub*K + code] = partial sq dist
-    lut_rows = []
-    for q in q_rows:
-        lut = []
-        for sub in range(m):
-            sv = q.emb[sub * ds : (sub + 1) * ds]
-            for code in range(codes_k):
-                c = codebooks[sub][code]
-                lut.append(
-                    float(sum((a - b) * (a - b) for a, b in zip(sv, c)))
-                )
-        lut_rows.append((int(q.vec_id), lut))
-    q_lut = local_rows_df(spark, 
-        lut_rows, "q_id bigint, lut array<double>"
+    q_lut = local_rows_df(
+        spark,
+        [(int(q.vec_id), _adc_lut(q.emb, codebooks)) for q in q_rows],
+        "q_id bigint, lut array<double>",
     )
     # ONE scan of the 4-byte-code table, broadcast nested loop against
     # the tiny LUT batch (cosine_topk's physical shape, but the scan
@@ -261,9 +261,31 @@ def pq_adc_score(
     pairs = encoded.join(
         F.broadcast(q_lut), F.col("vec_id") != F.col("q_id")
     )
-    # M static LUT lookups summed left-to-right (same fold order as the
-    # HOF form this replaced — see _fold_add) so the whole per-pair score
-    # is one codegen'd expression over the 4-byte code array.
+    return _adc_topk(pairs, len(codebooks), len(codebooks[0]), k)
+
+
+def _adc_lut(vec, codebooks: list[list[list[float]]]) -> list[float]:
+    """One query's flat M×K ADC lookup table: ``lut[sub*K + code]`` =
+    squared L2 between the vector's ``sub``-th subvector and that
+    code's centroid, folded sequentially over the subvector. ``vec``
+    is the raw query (flat PQ) or its residual in a probed cell
+    (IVF-PQ)."""
+    ds = len(codebooks[0][0])
+    lut = []
+    for sub, book in enumerate(codebooks):
+        sv = vec[sub * ds : (sub + 1) * ds]
+        for c in book:
+            lut.append(float(sum((a - b) * (a - b) for a, b in zip(sv, c))))
+    return lut
+
+
+def _adc_topk(pairs: DataFrame, m: int, codes_k: int, k: int) -> DataFrame:
+    """ADC top-k over ``(vec_id, codes, q_id, lut)`` pairs: each pair's
+    approximate squared L2 is its M LUT lookups summed left-to-right
+    (same fold order as the HOF form this replaced — see _fold_add), one
+    codegen'd expression over the 4-byte code array. Ranks ascending by
+    distance, neighbor-id tie-break; ``(q_id, neighbor_id, rank,
+    adc_dist)`` with adc_dist rounded 6 dp."""
     dist = _fold_add(
         [
             F.element_at(
@@ -277,23 +299,20 @@ def pq_adc_score(
             for sub in range(m)
         ]
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
+    return top_k_per_query(
         pairs.select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
             dist.alias("adc_dist"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "neighbor_id",
-            "rank",
-            F.round("adc_dist", 6).alias("adc_dist"),
-        )
+        ),
+        k,
+        F.col("adc_dist").asc(),
+        F.col("neighbor_id").asc(),
+    ).select(
+        "q_id",
+        "neighbor_id",
+        "rank",
+        F.round("adc_dist", 6).alias("adc_dist"),
     )
 
 
@@ -422,45 +441,22 @@ def land_ivfpq_index_points(
     # one task/file per cell regardless of the input's partitioning —
     # same rationale as similarity.land_ivf_index_points
     write_partitioned(cells.repartition("cell"), f"{path}/cells", "cell")
-    # parameter tables land via temp-dir + rename (the
-    # land_ivf_index_points discipline): consumers gate on the tables'
-    # EXISTENCE (contract gates on codebooks; load_index_centroids on
-    # centroids), so a crash mid-write must leave each ABSENT — never
-    # present-but-torn. Codebooks rename LAST: their presence implies
-    # the whole land completed.
-    import os
-    import shutil
-
-    tmp = f"{path}/_centroids_new"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        local_rows_df(spark,
-            [(i, list(map(float, c))) for i, c in enumerate(cents)],
-            "cell bigint, centroid array<double>",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(tmp)
+    # parameter tables land by similarity.swap_table: consumers gate on
+    # their EXISTENCE (contract gates on codebooks; load_index_centroids
+    # on centroids). Codebooks land LAST: their presence implies the
+    # whole land completed.
+    save_index_centroids(spark, path, cents)
+    swap_table(
+        spark,
+        path,
+        "codebooks",
+        [
+            (s, c, [float(v) for v in codebooks[s][c]])
+            for s in range(m)
+            for c in range(codes_k)
+        ],
+        "sub int, code int, vec array<double>",
     )
-    shutil.rmtree(f"{path}/centroids", ignore_errors=True)
-    os.rename(tmp, f"{path}/centroids")
-    cb_rows = [
-        (s, c, [float(v) for v in codebooks[s][c]])
-        for s in range(m)
-        for c in range(codes_k)
-    ]
-    tmp_cb = f"{path}/_codebooks_new"
-    shutil.rmtree(tmp_cb, ignore_errors=True)
-    (
-        local_rows_df(spark,
-            cb_rows, "sub int, code int, vec array<double>"
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(tmp_cb)
-    )
-    shutil.rmtree(f"{path}/codebooks", ignore_errors=True)
-    os.rename(tmp_cb, f"{path}/codebooks")
 
 
 def append_ivfpq_index(
@@ -479,10 +475,6 @@ def append_ivfpq_index(
     vec_id is quantized driver-side to its one cell and that single
     partition directory is probed for the row — present means a prior
     attempt completed and the replay no-ops."""
-    from mapreducekmean_spark.operators.similarity import (
-        batch_tail_already_in_cells,
-    )
-
     cents, codebooks = _load_ivfpq_params(spark, path)
     dim = len(codebooks) * len(codebooks[0][0])
     empty, already = batch_tail_already_in_cells(
@@ -513,22 +505,11 @@ def _load_ivfpq_params(
     """(centroids, codebooks) of a landed IVF-PQ index — the one copy
     of the codebook-table reconstruction, shared by the query and
     append paths. Completes a crash inside the codebooks rename window
-    of :func:`land_ivfpq_index_points` (the ``load_index_centroids``
-    discipline): the finished table still at its temp name renames
-    into place — by landing order, cells and centroids already
-    landed when the codebooks temp write finished."""
-    import os
-
-    from mapreducekmean_spark.operators.similarity import (
-        load_index_centroids,
-    )
-
+    of :func:`land_ivfpq_index_points` (``similarity.complete_swap``) —
+    by landing order, cells and centroids already landed when the
+    codebooks temp write finished."""
     cents = load_index_centroids(spark, path)
-    if not os.path.exists(f"{path}/codebooks") and os.path.exists(
-        f"{path}/_codebooks_new"
-    ):
-        os.rename(f"{path}/_codebooks_new", f"{path}/codebooks")
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
+    cb_rows = spark.read.parquet(complete_swap(path, "codebooks")).collect()
     m = 1 + max(r.sub for r in cb_rows)
     codes_k = 1 + max(r.code for r in cb_rows)
     codebooks: list[list] = [[None] * codes_k for _ in range(m)]
@@ -582,39 +563,28 @@ def ann_ivfpq_indexed(
     needs the probed cell set for its own raw-store pruning) hand over
     the collected ``(q_id, cell, q_emb)`` rows so the kernel runs
     exactly once per serve."""
-    from mapreducekmean_spark.operators.similarity import (
-        N_PROBE,
-        _probe_cells,
-        _queries_and_points,
-    )
-
     if nprobe is None:
         nprobe = N_PROBE
     cents, codebooks = _load_ivfpq_params(spark, path)
-    ncells = len(cents)
-    m = len(codebooks)
-    codes_k = len(codebooks[0])
-    ds = len(codebooks[0][0])
-
     if qs is None:
         qs, _ = _queries_and_points(spark, sf_dir)
     if probe_rows is None:
-        q_cells = _probe_cells(qs, cents, ncells, nprobe)
+        q_cells = _probe_cells(qs, cents, len(cents), nprobe)
         probe_rows = q_cells.collect()  # ≤ n_queries × nprobe — bounded
-    lut_rows = []
-    for r in probe_rows:
-        res = [a - b for a, b in zip(r.q_emb, cents[r.cell])]
-        lut = []
-        for sub in range(m):
-            sv = res[sub * ds : (sub + 1) * ds]
-            for code in range(codes_k):
-                c = codebooks[sub][code]
-                lut.append(
-                    float(sum((a - b) * (a - b) for a, b in zip(sv, c)))
-                )
-        lut_rows.append((int(r.q_id), int(r.cell), lut))
-    q_lut = local_rows_df(spark, 
-        lut_rows, "q_id bigint, cell bigint, lut array<double>"
+    q_lut = local_rows_df(
+        spark,
+        [
+            (
+                int(r.q_id),
+                int(r.cell),
+                _adc_lut(
+                    [a - b for a, b in zip(r.q_emb, cents[r.cell])],
+                    codebooks,
+                ),
+            )
+            for r in probe_rows
+        ],
+        "q_id bigint, cell bigint, lut array<double>",
     )
     probed = sorted({int(r.cell) for r in probe_rows})
     cells = (
@@ -625,37 +595,7 @@ def ann_ivfpq_indexed(
     pairs = cells.join(F.broadcast(q_lut), "cell").filter(
         F.col("vec_id") != F.col("q_id")
     )
-    dist = _fold_add(
-        [
-            F.element_at(
-                F.col("lut"),
-                (
-                    F.lit(sub * codes_k)
-                    + F.element_at(F.col("codes"), sub + 1)
-                    + 1
-                ).cast("int"),
-            )
-            for sub in range(m)
-        ]
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dist.alias("adc_dist"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "neighbor_id",
-            "rank",
-            F.round("adc_dist", 6).alias("adc_dist"),
-        )
-    )
+    return _adc_topk(pairs, len(codebooks), len(codebooks[0]), k)
 
 
 def pq_adc_recall(
@@ -678,11 +618,6 @@ def pq_adc_recall(
     Sensitivity contracts pinned in tests/test_pq.py: recall is
     non-decreasing as ``m`` grows (finer subquantizers), and the
     exact-rerank bound caps every compressed tier."""
-    from mapreducekmean_spark.operators.similarity import (
-        l2_topk,
-        recall_vs_exact,
-    )
-
     approx = pq_adc_topk(spark, sf_dir, k=k, m=m, codes_k=codes_k,
                          iters=iters)
     exact = l2_topk(spark, sf_dir, k=k)
@@ -704,11 +639,6 @@ def ivfpq_recall(
     probing vs compression, and with ``ann_recall`` (pruning only, raw
     vectors) to size ``nprobe``. Monotone-in-nprobe and the
     exact-rerank upper bound are pinned in tests/test_pq.py."""
-    from mapreducekmean_spark.operators.similarity import (
-        l2_topk,
-        recall_vs_exact,
-    )
-
     approx = ann_ivfpq_indexed(spark, sf_dir, path, k=k, nprobe=nprobe)
     exact = l2_topk(spark, sf_dir, k=k)
     return recall_vs_exact(exact, approx, k)
@@ -763,13 +693,35 @@ def ivfpq_refined_topk(
     plan-pin tests read the partition-pruned scans off it); the
     coverage guard then re-executes the probed scans — keep the
     default in any serve path."""
-    from mapreducekmean_spark.functions.vector import sq_dist
-    from mapreducekmean_spark.operators.similarity import (
-        N_PROBE,
-        _probe_cells,
-        _queries_and_points,
-        load_index_centroids,
+    pairs = _refine_pairs(
+        spark, sf_dir, pq_path, raw_path, m_cand, nprobe, qs, checkpoint,
+        "ivfpq_refined_topk",
     )
+    return top_k_per_query(
+        pairs, k, F.col("dist").asc(), F.col("neighbor_id").asc()
+    ).select("q_id", "neighbor_id", "rank", F.round("dist", 6).alias("dist"))
+
+
+def _refine_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    pq_path: str,
+    raw_path: str,
+    m_cand: int,
+    nprobe: int | None,
+    qs: DataFrame | None,
+    checkpoint: bool,
+    who: str,
+) -> DataFrame:
+    """The exact-refine tier's candidate set, shared by
+    :func:`ivfpq_refined_topk` and :func:`ivfpq_refined_mcand_curve`:
+    ``(q_id, neighbor_id, pre_rank, dist)`` — each query's ADC
+    top-``m_cand`` preselect with its ADC rank, re-scored by EXACT
+    squared L2 against the paired raw store. Refuses unpaired stores
+    (table-level drift) and, after the join, any candidate without a
+    raw row (row-level drift); ``who`` names the caller in both
+    messages."""
+    from mapreducekmean_spark.functions.vector import sq_dist
 
     if nprobe is None:
         nprobe = N_PROBE
@@ -779,7 +731,7 @@ def ivfpq_refined_topk(
         [float(v) for v in c] for c in cents
     ]:
         raise ValueError(
-            "ivfpq_refined_topk needs PAIRED indexes: the raw-IVF store "
+            f"{who} needs PAIRED indexes: the raw-IVF store "
             f"at {raw_path!r} is landed under different coarse centroids "
             f"than the IVF-PQ store at {pq_path!r}, so candidate rows "
             "would not sit in the probed raw partitions. Re-land one side "
@@ -795,30 +747,32 @@ def ivfpq_refined_topk(
     probe_rows = _probe_cells(qs, cents, len(cents), nprobe).collect()
     # stage 1 — compressed preselect: ADC top-m_cand off the codes-only
     # partition-pruned scan (all the heavy lifting; see ann_ivfpq_indexed).
-    # localCheckpoint (bounded: queries × m_cand two-column rows) so the
-    # scan executes once — the coverage guard below and the returned plan
+    # localCheckpoint (bounded: queries × m_cand rows) so the scan
+    # executes once — the coverage guard below and the returned plan
     # would otherwise each re-run it (the corpus-proportional stage).
     cand = ann_ivfpq_indexed(
         spark, sf_dir, pq_path, k=m_cand, nprobe=nprobe, qs=qs,
         probe_rows=probe_rows,
-    ).select("q_id", "neighbor_id")
+    ).select("q_id", "neighbor_id", F.col("rank").alias("pre_rank"))
     if checkpoint:
         cand = cand.localCheckpoint()
-    # stage 2 — exact re-rank: the candidates' raw vectors live in the
+    # stage 2 — exact re-score: the candidates' raw vectors live in the
     # probed cells of the paired store (shared quantizer), so the raw
     # scan opens exactly the probed directories; the candidate set is
-    # bounded (queries × m_cand), hence broadcast.
+    # bounded (queries × m_cand), hence broadcast. localCheckpoint again
+    # (bounded) so the probed raw-cell scan + join executes once, shared
+    # by the coverage count and the caller's ranking.
     probed = sorted({int(r.cell) for r in probe_rows})
     raw = (
         spark.read.parquet(f"{raw_path}/cells")
         .filter(F.col("cell").isin(probed))
         .select(F.col("vec_id").alias("neighbor_id"), "emb")
     )
-    # localCheckpoint again (bounded: ≤ queries × m_cand rows carrying
-    # two d-width vectors) so the probed raw-cell scan + join executes
-    # once, shared by the coverage count and the final exact ranking.
-    pairs = raw.join(F.broadcast(cand), "neighbor_id").join(
-        F.broadcast(qs.select("q_id", "q_emb")), "q_id"
+    pairs = (
+        raw.join(F.broadcast(cand), "neighbor_id")
+        .join(F.broadcast(qs.select("q_id", "q_emb")), "q_id")
+        .withColumn("dist", sq_dist(F.col("q_emb"), F.col("emb")))
+        .select("q_id", "neighbor_id", "pre_rank", "dist")
     )
     if checkpoint:
         pairs = pairs.localCheckpoint()
@@ -836,27 +790,14 @@ def ivfpq_refined_topk(
     n_cand, n_cov = int(cov_row["_cand"]), int(cov_row["_cov"])
     if n_cov != n_cand:
         raise ValueError(
-            f"ivfpq_refined_topk: only {n_cov} of {n_cand} preselected "
+            f"{who}: only {n_cov} of {n_cand} preselected "
             f"candidates found raw rows in the probed cells of "
             f"{raw_path!r} — the stores have drifted row-level. "
             "Restore pairing by re-landing the raw side under the PQ "
             "store's centroid table (land_ivf_index_points(..., "
             "cents=load_index_centroids(spark, pq_path)))."
         )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("dist", sq_dist(F.col("q_emb"), F.col("emb")))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "neighbor_id",
-            "rank",
-            F.round("dist", 6).alias("dist"),
-        )
-    )
+    return pairs
 
 
 def ivfpq_refined_recall(
@@ -874,11 +815,6 @@ def ivfpq_refined_recall(
     cell pruning and the preselect cut remain), so refined recall ≥
     ``ivfpq_recall`` at equal nprobe (pinned in tests/test_pq.py,
     together with monotonicity in ``m_cand``)."""
-    from mapreducekmean_spark.operators.similarity import (
-        l2_topk,
-        recall_vs_exact,
-    )
-
     approx = ivfpq_refined_topk(
         spark, sf_dir, pq_path, raw_path, k=k, m_cand=m_cand, nprobe=nprobe
     )
@@ -914,64 +850,10 @@ def ivfpq_refined_mcand_curve(
     that shared candidate list. The exact baseline is computed once
     (the priced measurement). Levels are non-decreasing in m_cand
     (candidate superset — pinned in tests/test_pq.py)."""
-    from mapreducekmean_spark.functions.vector import sq_dist
-    from mapreducekmean_spark.operators.similarity import (
-        N_PROBE,
-        _probe_cells,
-        _queries_and_points,
-        l2_topk,
-        load_index_centroids,
+    pairs = _refine_pairs(
+        spark, sf_dir, pq_path, raw_path, max(int(m) for m in m_cands),
+        nprobe, None, True, "ivfpq_refined_mcand_curve",
     )
-
-    if nprobe is None:
-        nprobe = N_PROBE
-    cents, _codebooks = _load_ivfpq_params(spark, pq_path)
-    raw_cents = load_index_centroids(spark, raw_path)
-    if [[float(v) for v in c] for c in raw_cents] != [
-        [float(v) for v in c] for c in cents
-    ]:
-        raise ValueError(
-            "ivfpq_refined_mcand_curve needs PAIRED indexes (same coarse "
-            "centroids both stores) — re-land one side with cents pinned "
-            "to the other's; see ivfpq_refined_topk."
-        )
-    qs, _ = _queries_and_points(spark, sf_dir)
-    probe_rows = _probe_cells(qs, cents, len(cents), nprobe).collect()
-    max_m = max(int(m) for m in m_cands)
-    cand = (
-        ann_ivfpq_indexed(
-            spark, sf_dir, pq_path, k=max_m, nprobe=nprobe, qs=qs,
-            probe_rows=probe_rows,
-        )
-        .select("q_id", "neighbor_id", F.col("rank").alias("pre_rank"))
-        .localCheckpoint()
-    )
-    probed = sorted({int(r.cell) for r in probe_rows})
-    raw = (
-        spark.read.parquet(f"{raw_path}/cells")
-        .filter(F.col("cell").isin(probed))
-        .select(F.col("vec_id").alias("neighbor_id"), "emb")
-    )
-    pairs = (
-        raw.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qs.select("q_id", "q_emb")), "q_id")
-        .withColumn("dist", sq_dist(F.col("q_emb"), F.col("emb")))
-        .select("q_id", "neighbor_id", "pre_rank", "dist")
-        .localCheckpoint()
-    )
-    (cov_row,) = (
-        cand.agg(F.count(F.lit(1)).alias("_cand"))
-        .crossJoin(pairs.agg(F.count(F.lit(1)).alias("_cov")))
-        .collect()
-    )  # ONE job for both coverage counts (crossJoin of 1-row aggregates)
-    n_cand, n_cov = int(cov_row["_cand"]), int(cov_row["_cov"])
-    if n_cov != n_cand:
-        raise ValueError(
-            f"ivfpq_refined_mcand_curve: only {n_cov} of {n_cand} "
-            f"preselected candidates found raw rows in the probed cells "
-            f"of {raw_path!r} — the stores have drifted row-level; "
-            "re-land the raw side under the PQ store's centroids."
-        )
     exact = (
         l2_topk(spark, sf_dir, k=k)
         .select("q_id", "neighbor_id")
@@ -980,8 +862,6 @@ def ivfpq_refined_mcand_curve(
     n_q = exact.select("q_id").distinct().agg(
         F.count(F.lit(1)).cast("bigint").alias("n_queries")
     )
-    from mapreducekmean_spark.operators.similarity import _prefix_cut_curve
-
     return _prefix_cut_curve(
         pairs,
         exact,
@@ -1055,10 +935,6 @@ def rebalance_ivfpq_cells(
     import os
     import shutil
 
-    from mapreducekmean_spark.operators.similarity import (
-        SEM_DUP_MAX_CELL,
-        load_index_centroids,
-    )
     from mapreducekmean_spark.sources.bucketing import write_partitioned
 
     if max_cell_rows is None:
@@ -1189,22 +1065,8 @@ def rebalance_ivfpq_cells(
     write_partitioned(
         coded.repartition("cell"), cells_dir, "cell", mode="append"
     )
-    # (3) swap the centroid table: temp dir + rename
-    tmp = f"{path}/_centroids_new"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    (
-        local_rows_df(
-            spark,
-            [(i, v) for i, v in enumerate(final)],
-            "cell bigint, centroid array<double>",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    shutil.rmtree(f"{path}/centroids")
-    os.rename(tmp, f"{path}/centroids")
+    # (3) swap the centroid table (load completes the rename window)
+    save_index_centroids(spark, path, final)
     # (4) retired directories last (tombstoned since the swap)
     for c in retired:
         shutil.rmtree(os.path.join(cells_dir, f"cell={c}"))

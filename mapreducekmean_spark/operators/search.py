@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreducekmean_spark.functions.skew import shuffle_width
+from mapreducekmean_spark.operators.similarity import top_k_per_query
 from mapreducekmean_spark.operators.text import tokens
 
 from mapreducekmean_spark.session import local_rows_df
@@ -543,14 +544,9 @@ def bm25_search_indexed_batch(
         task_topn,
         "q_id bigint, doc_id bigint, s double, n_matched_terms bigint",
     ).withColumn("score", F.round(F.col("s"), 6))
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= top_n)
-        .select("q_id", "doc_id", "score", "n_matched_terms", "rank")
-    )
+    return top_k_per_query(
+        scored, top_n, F.desc("score"), F.asc("doc_id")
+    ).select("q_id", "doc_id", "score", "n_matched_terms", "rank")
 
 
 # --- hybrid retrieval: reciprocal-rank fusion -----------------------------
@@ -581,8 +577,6 @@ def rrf_fuse(
     per-query bounded (top-n each) — never corpus-sized."""
     if not rank_tables:
         raise ValueError("rrf_fuse needs at least one rank table")
-    from pyspark.sql import Window
-
     fused = None
     for i, t in enumerate(rank_tables):
         t = t.select("q_id", "doc_id", F.col("rank").alias(f"_r{i}"))
@@ -595,19 +589,13 @@ def rrf_fuse(
             F.lit(1.0) / (F.lit(rrf_k) + F.col(f"_r{i}")), F.lit(0.0)
         )
         score = term if score is None else score + term
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("rrf_raw").desc(), F.col("doc_id").asc()
-    )
-    return (
-        fused.withColumn("rrf_raw", score)
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "doc_id",
-            "rank",
-            F.round("rrf_raw", 6).alias("rrf_score"),
-        )
+    return top_k_per_query(
+        fused.withColumn("rrf_raw", score),
+        k,
+        F.col("rrf_raw").desc(),
+        F.col("doc_id").asc(),
+    ).select(
+        "q_id", "doc_id", "rank", F.round("rrf_raw", 6).alias("rrf_score")
     )
 
 
@@ -620,8 +608,6 @@ def lexical_overlap_ranks(
     The integer ranks are what the fully-oracle-able hybrid query
     fuses; production stacks swap in :func:`bm25_search_indexed` ranks
     via the same ``rrf_fuse`` (pinned in tests/test_search.py)."""
-    from pyspark.sql import Window
-
     toks = docs.select(
         "doc_id",
         F.explode(F.array_distinct(tokens("text"))).alias("tok"),
@@ -635,14 +621,9 @@ def lexical_overlap_ranks(
         .groupBy("q_id", "doc_id")
         .agg(F.count("*").alias("overlap"))
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("overlap").desc(), F.col("doc_id").asc()
-    )
-    return (
-        ov.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= n_cand)
-        .select("q_id", "doc_id", "rank", "overlap")
-    )
+    return top_k_per_query(
+        ov, n_cand, F.col("overlap").desc(), F.col("doc_id").asc()
+    ).select("q_id", "doc_id", "rank", "overlap")
 
 
 def hybrid_topk(
@@ -725,8 +706,6 @@ def cross_encoder_rerank(
     strings, as in :func:`serve_retrieval`."""
     import pandas as pd
 
-    from pyspark.sql import Window
-
     if scorer is None:
         scorer = overlap_ratio_scorer
     # the candidate set is bounded by construction (the fuser's top-n
@@ -764,16 +743,9 @@ def cross_encoder_rerank(
     scored = pairs.mapInPandas(
         score, "q_id bigint, doc_id bigint, ce_raw double"
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("ce_raw").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id", "doc_id", "rank", F.round("ce_raw", 6).alias("ce_score")
-        )
-    )
+    return top_k_per_query(
+        scored, k, F.col("ce_raw").desc(), F.col("doc_id").asc()
+    ).select("q_id", "doc_id", "rank", F.round("ce_raw", 6).alias("ce_score"))
 
 
 def serve_retrieval(
@@ -835,11 +807,10 @@ def serve_retrieval(
         spark, queries.select("q_id", "text"), bm25_name, top_n=top_s
     )
     if exclude_self:
-        w = Window.partitionBy("q_id").orderBy(F.col("rank").asc())
-        sparse = (
-            sparse.filter(F.col("doc_id") != F.col("q_id"))
-            .withColumn("rank", F.row_number().over(w).cast("bigint"))
-            .filter(F.col("rank") <= n_cand)
+        sparse = top_k_per_query(
+            sparse.filter(F.col("doc_id") != F.col("q_id")),
+            n_cand,
+            F.col("rank").asc(),
         )
     dense = dense_fn(
         spark,

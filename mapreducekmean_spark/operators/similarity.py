@@ -17,6 +17,11 @@ Scale design:
   becomes a partition column and probing is partition pruning.
 - Hyperplane LSH: 16 deterministic md5-seeded sign projections per
   vector → bucket join on uniform keys, O(n) near-dup blocking.
+
+Every ANN and retrieval query (here, in ``pq.py`` and in ``search.py``)
+ends in the same tail: score candidate pairs, then keep each query's
+best k with :func:`top_k_per_query` — the one per-query rank cut. The
+cosine paths share :func:`_sim_topk` on top of it.
 """
 
 from __future__ import annotations
@@ -72,19 +77,32 @@ def cosine_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     qs, pts = _queries_and_points(spark, sf_dir)
     joined = pts.join(F.broadcast(qs), F.col("vec_id") != F.col("q_id"))
     sim = cosine_sim(F.col("q_emb"), F.col("emb"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("sim_raw").desc(), F.col("vec_id").asc()
-    )
-    return (
-        joined.withColumn("sim_raw", sim)
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("sim_raw", 6).alias("sim"),
-        )
+    return _sim_topk(joined.withColumn("sim_raw", sim), k)
+
+
+def top_k_per_query(scored: DataFrame, k: int, *order) -> DataFrame:
+    """The per-query rank cut every ANN and retrieval query ends with:
+    ``rank`` = 1-based ``row_number`` (bigint) over ``q_id`` partitions
+    in ``order``, rows with ``rank <= k`` kept. ``order`` must be total
+    within a query (an id tie-break last) so the cut is deterministic.
+    Callers project their own output columns."""
+    w = Window.partitionBy("q_id").orderBy(*order)
+    return scored.withColumn(
+        "rank", F.row_number().over(w).cast("bigint")
+    ).filter(F.col("rank") <= k)
+
+
+def _sim_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Cosine top-k over ``(q_id, vec_id, sim_raw)`` pairs — sim desc,
+    neighbor-id tie-break — as ``(q_id, neighbor_id, rank, sim)`` with
+    sim rounded 6 dp: the output of every cosine ANN path."""
+    return top_k_per_query(
+        scored, k, F.col("sim_raw").desc(), F.col("vec_id").asc()
+    ).select(
+        "q_id",
+        F.col("vec_id").alias("neighbor_id"),
+        "rank",
+        F.round("sim_raw", 6).alias("sim"),
     )
 
 
@@ -99,9 +117,7 @@ def ivf_topk(
     deterministic-init centroid, probe each query's ``nprobe`` nearest
     cells, brute-force only within those cells."""
     qs, pts = _queries_and_points(spark, sf_dir)
-    cents = km.collect_centroids(
-        km.deterministic_init(km.embeddings(spark, sf_dir), ncells)
-    )
+    cents = km.init_centroids(spark, sf_dir, ncells)
     bucketed = km.assign(pts, cents).select(
         "vec_id", "emb", F.col("cluster_id").alias("cell")
     )
@@ -230,20 +246,7 @@ def _score_probed_cells(
     cands = cells.join(F.broadcast(q_cells), "cell").filter(
         F.col("vec_id") != F.col("q_id")
     )
-    scored = _score_candidates(cands)
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("sim_raw").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("sim_raw", 6).alias("sim"),
-        )
-    )
+    return _sim_topk(_score_candidates(cands), k)
 
 
 def _score_probed_cells_bc(
@@ -322,19 +325,7 @@ def _score_probed_cells_bc(
     scored = cells.select(
         "vec_id", "emb", F.col("cell").cast("bigint").alias("cell")
     ).mapInPandas(score, "q_id bigint, vec_id bigint, sim_raw double")
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("sim_raw").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("sim_raw", 6).alias("sim"),
-        )
-    )
+    return _sim_topk(scored, k)
 
 
 def land_ivf_index(
@@ -408,28 +399,61 @@ def land_ivf_index_points(
     # emits exactly ONE file per touched cell — the append-friendly
     # grain the compactor restores
     write_partitioned(cells.repartition("cell"), f"{path}/cells", "cell")
-    # centroids land via temp-dir + rename (the rebalance_ivf_cells
-    # discipline, same temp name so load_index_centroids completes the
-    # rename window): consumers gate on the directory's existence
-    # (semantic_dedup_batch's first-batch land), and a crash mid-write
-    # must leave it ABSENT (replay re-lands) — never present-but-torn
-    # (replay would skip the land and the stream wedges).
+    # consumers gate on the centroid table's existence
+    # (semantic_dedup_batch's first-batch land), so it lands last
+    save_index_centroids(spark, path, cents)
+
+
+def swap_table(
+    spark: SparkSession, path: str, name: str, rows: list, schema: str
+) -> None:
+    """Land a small driver-built table at ``{path}/{name}`` by temp dir +
+    rename — the write of every index parameter table (centroids, PQ
+    codebooks). Consumers gate on the table's EXISTENCE, so a crash
+    mid-write must leave it absent (replay re-lands), never
+    present-but-torn (replay would skip the land and a stream wedges).
+    A crash inside the rename window (old table removed, new one still
+    at its temp name) is completed by :func:`complete_swap` on load."""
     import os
     import shutil
 
-    tmp = f"{path}/_centroids_new"
+    tmp = f"{path}/_{name}_new"
     shutil.rmtree(tmp, ignore_errors=True)
     (
-        local_rows_df(spark,
-            [(i, list(c)) for i, c in enumerate(cents)],
-            "cell bigint, centroid array<double>",
-        )
+        local_rows_df(spark, rows, schema)
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(tmp)
     )
-    shutil.rmtree(f"{path}/centroids", ignore_errors=True)
-    os.rename(tmp, f"{path}/centroids")
+    shutil.rmtree(f"{path}/{name}", ignore_errors=True)
+    os.rename(tmp, f"{path}/{name}")
+
+
+def complete_swap(path: str, name: str) -> str:
+    """Finish a :func:`swap_table` that crashed inside its rename window
+    (table absent, finished temp copy present) and return the table's
+    path."""
+    import os
+
+    final, tmp = f"{path}/{name}", f"{path}/_{name}_new"
+    if not os.path.exists(final) and os.path.exists(tmp):
+        os.rename(tmp, final)
+    return final
+
+
+def save_index_centroids(
+    spark: SparkSession, path: str, cents: list[list[float]]
+) -> None:
+    """Write the coarse quantizer's ``centroids`` table (cell-ordered)
+    through :func:`swap_table` — the inverse of
+    :func:`load_index_centroids`."""
+    swap_table(
+        spark,
+        path,
+        "centroids",
+        [(i, [float(v) for v in c]) for i, c in enumerate(cents)],
+        "cell bigint, centroid array<double>",
+    )
 
 
 def append_ivf_index(
@@ -473,16 +497,9 @@ def load_index_centroids(
     """The landed coarse quantizer, cell-ordered — shared by every
     consumer of a cell-partitioned index (raw IVF and IVF-PQ).
 
-    Completes a crash inside :func:`rebalance_ivf_cells`' centroid-swap
-    rename window: the old table removed, the finished new one still at
-    its temp name — rename it into place and proceed."""
-    import os
-
-    if not os.path.exists(f"{path}/centroids") and os.path.exists(
-        f"{path}/_centroids_new"
-    ):
-        os.rename(f"{path}/_centroids_new", f"{path}/centroids")
-    rows = spark.read.parquet(f"{path}/centroids").collect()
+    Completes a crash inside a centroid swap's rename window (land or
+    rebalance) before reading — see :func:`complete_swap`."""
+    rows = spark.read.parquet(complete_swap(path, "centroids")).collect()
     return [r.centroid for r in sorted(rows, key=lambda r: r.cell)]
 
 
@@ -722,28 +739,15 @@ def rebalance_ivf_cells(
             added.extend(list(sc) for sc in sub)
             next_id += k
             retired.append(c)
-        # (3) swap the centroid table: temp dir + rename (the load side
-        # completes a crash inside the rename window)
+        # (3) swap the centroid table (the load side completes a crash
+        # inside the rename window)
         tomb = [float("inf")] * dim
-        final = [
-            tomb if i in set(retired) else list(c)
-            for i, c in enumerate(cents)
-        ] + added
-        tmp = f"{path}/_centroids_new"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        (
-            local_rows_df(
-                spark,
-                [(i, v) for i, v in enumerate(final)],
-                "cell bigint, centroid array<double>",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
+        save_index_centroids(
+            spark,
+            path,
+            [tomb if i in set(retired) else c for i, c in enumerate(cents)]
+            + added,
         )
-        shutil.rmtree(f"{path}/centroids")
-        os.rename(tmp, f"{path}/centroids")
         # (4) retired directories last (tombstoned since the swap)
         for c in retired:
             shutil.rmtree(os.path.join(cells_dir, f"cell={c}"))
@@ -940,9 +944,7 @@ def semantic_dedup(
 
     pts = km.embeddings(spark, sf_dir).select("vec_id", "emb")
     if cents is None:
-        cents = km.collect_centroids(
-            km.deterministic_init(km.embeddings(spark, sf_dir), ncells)
-        )
+        cents = km.init_centroids(spark, sf_dir, ncells)
     bucketed = km.assign(pts, cents).select(
         "vec_id", "emb", F.col("cluster_id").alias("cell")
     )
@@ -1212,21 +1214,11 @@ def ann_lsh_topk(
         .distinct()
     )
     scored = cand.join(pts, "vec_id").join(F.broadcast(qs), "q_id")
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("sim_raw").desc(), F.col("vec_id").asc()
-    )
-    return (
+    return _sim_topk(
         scored.withColumn(
             "sim_raw", cosine_sim(F.col("q_emb"), F.col("emb"))
-        )
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("sim_raw", 6).alias("sim"),
-        )
+        ),
+        k,
     )
 
 
@@ -1415,15 +1407,12 @@ def l2_topk(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
 
     qs, pts = _queries_and_points(spark, sf_dir)
     joined = pts.join(F.broadcast(qs), F.col("vec_id") != F.col("q_id"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        joined.withColumn("dist", sq_dist(F.col("q_emb"), F.col("emb")))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "rank")
-    )
+    return top_k_per_query(
+        joined.withColumn("dist", sq_dist(F.col("q_emb"), F.col("emb"))),
+        k,
+        F.col("dist").asc(),
+        F.col("vec_id").asc(),
+    ).select("q_id", F.col("vec_id").alias("neighbor_id"), "rank")
 
 
 def recall_vs_exact(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
@@ -1566,9 +1555,7 @@ def ann_recall_curve(
         F.count(F.lit(1)).cast("bigint").alias("n_queries")
     )
     qs, pts = _queries_and_points(spark, sf_dir)
-    cents = km.collect_centroids(
-        km.deterministic_init(km.embeddings(spark, sf_dir), ncells)
-    )
+    cents = km.init_centroids(spark, sf_dir, ncells)
     bucketed = km.assign(pts, cents).select(
         "vec_id", "emb", F.col("cluster_id").alias("cell")
     )

@@ -584,6 +584,34 @@ def test_refined_topk_refuses_unpaired_indexes(spark, sf_oracle, tmp_path):
         ivfpq_refined_topk(spark, sf_oracle, pq_path, raw_path)
 
 
+@pytest.mark.parametrize(
+    "refine", ["ivfpq_refined_topk", "ivfpq_refined_mcand_curve"]
+)
+def test_refine_coverage_guard_refuses_row_level_drift(
+    spark, sf_oracle, tmp_path, refine
+):
+    """The row-level coverage guard: stores that still share their
+    centroid table (so the pairing check passes) but whose raw side has
+    lost a preselected candidate's row must be refused — refining only
+    the covered subset would silently degrade the result."""
+    from mapreducekmean_spark.operators import pq
+    from mapreducekmean_spark.operators.similarity import (
+        land_ivf_index_points,
+        purge_ivf_keys,
+    )
+
+    pq_path = str(tmp_path / "ivfpq")
+    raw_path = str(tmp_path / "ivfraw")
+    pq.land_ivfpq_index(spark, sf_oracle, pq_path)
+    cents, _cb = pq._load_ivfpq_params(spark, pq_path)
+    land_ivf_index_points(spark, _pts(spark, sf_oracle), raw_path, cents=cents)
+    # a rank-1 ADC candidate is preselected at every m_cand
+    victim = pq.ann_ivfpq_indexed(spark, sf_oracle, pq_path, k=1).first()
+    purge_ivf_keys(spark, raw_path, [int(victim["neighbor_id"])])
+    with pytest.raises(ValueError, match="drifted"):
+        getattr(pq, refine)(spark, sf_oracle, pq_path, raw_path)
+
+
 def _land_hot_pair(spark, sf_oracle, pq_path, raw_path):
     """Land PAIRED IVF-PQ + raw-IVF stores under a deliberately bad
     quantizer: centroid 0 in the data, centroid 1 at 1e6 — every row
