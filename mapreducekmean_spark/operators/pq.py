@@ -53,15 +53,16 @@ from mapreducekmean_spark.operators.similarity import (
     N_PROBE,
     N_QUERIES,
     SEM_DUP_MAX_CELL,
+    _append_cells,
+    _land_cells,
     _prefix_cut_curve,
     _probe_cells,
     _queries_and_points,
-    batch_tail_already_in_cells,
+    _rebalance_cells,
     complete_swap,
     l2_topk,
     load_index_centroids,
     recall_vs_exact,
-    save_index_centroids,
     swap_table,
     top_k_per_query,
 )
@@ -409,43 +410,27 @@ def land_ivfpq_index_points(
 ) -> None:
     """:func:`land_ivfpq_index` over an explicit ``(vec_id, emb)``
     frame — the composable form an ingest pipeline feeds batch by
-    batch (mirrors ``similarity.land_ivf_index_points``, including the
-    ``train_iters`` Lloyd refinement of the coarse quantizer — see the
-    cell-skew rationale there; residual PQ benefits doubly, since
-    tighter cells mean smaller residuals and lower quantization
-    error)."""
+    batch: the cell-store land of ``similarity.land_ivf_index_points``
+    (same quantizer choice, including the ``train_iters`` Lloyd
+    refinement — residual PQ benefits doubly, since tighter cells mean
+    smaller residuals and lower quantization error) with the rows
+    encoded by :func:`_encode_cells`, codebooks trained on the
+    residuals unless given."""
     if ncells is None:
         ncells = km.DEFAULT_K
-    pts = pts.select("vec_id", "emb")
-    dim = len(pts.select("emb").first()["emb"])
-    if cents is None:
-        if train_iters > 0:
-            cents = km.lloyd(pts, ncells, max_iter=train_iters).centroids
-        else:
-            cents = km.collect_centroids(km.deterministic_init(pts, ncells))
-    assigned = km.assign(pts, cents).select(
-        "vec_id", "emb", F.col("cluster_id").alias("cell")
-    )
-    res = assigned.select(
-        "vec_id", "cell", _residual_col(cents, dim).alias("emb")
-    ).localCheckpoint()
-    if codebooks is None:
-        codebooks = train_pq_codebooks(
-            res.select("vec_id", "emb"), dim, m, codes_k, iters
-        )
-    cells = pq_encode(res.select("vec_id", "emb"), codebooks).join(
-        res.select("vec_id", "cell"), "vec_id"
-    )
-    from mapreducekmean_spark.sources.bucketing import write_partitioned
 
-    # one task/file per cell regardless of the input's partitioning —
-    # same rationale as similarity.land_ivf_index_points
-    write_partitioned(cells.repartition("cell"), f"{path}/cells", "cell")
+    def encode(cells, cents):
+        nonlocal codebooks
+        coded, codebooks = _encode_cells(
+            cells, cents, codebooks, m, codes_k, iters
+        )
+        return coded
+
+    _land_cells(spark, pts, path, ncells, cents, train_iters, encode)
     # parameter tables land by similarity.swap_table: consumers gate on
     # their EXISTENCE (contract gates on codebooks; load_index_centroids
-    # on centroids). Codebooks land LAST: their presence implies the
-    # whole land completed.
-    save_index_centroids(spark, path, cents)
+    # on centroids). Codebooks land LAST, after the cells and centroids:
+    # their presence implies the whole land completed.
     swap_table(
         spark,
         path,
@@ -476,26 +461,9 @@ def append_ivfpq_index(
     partition directory is probed for the row — present means a prior
     attempt completed and the replay no-ops."""
     cents, codebooks = _load_ivfpq_params(spark, path)
-    dim = len(codebooks) * len(codebooks[0][0])
-    empty, already = batch_tail_already_in_cells(
-        spark, path, new_points, cents
-    )
-    if empty or already:
-        return  # nothing to append / replay of a completed batch
-    assigned = km.assign(
-        new_points.select("vec_id", "emb"), cents
-    ).select("vec_id", "emb", F.col("cluster_id").alias("cell"))
-    res = assigned.select(
-        "vec_id", "cell", _residual_col(cents, dim).alias("emb")
-    ).localCheckpoint()
-    cells = pq_encode(res.select("vec_id", "emb"), codebooks).join(
-        res.select("vec_id", "cell"), "vec_id"
-    )
-    from mapreducekmean_spark.sources.bucketing import write_partitioned
-
-    # one task/file per touched cell — see land_ivf_index_points
-    write_partitioned(
-        cells.repartition("cell"), f"{path}/cells", "cell", mode="append"
+    _append_cells(
+        spark, new_points, path, cents,
+        lambda cells, cents: _encode_cells(cells, cents, codebooks)[0],
     )
 
 
@@ -518,7 +486,35 @@ def _load_ivfpq_params(
     return cents, codebooks
 
 
-def _residual_col(cents: list[list[float]], dim: int) -> Column:
+def _encode_cells(
+    cells: DataFrame,
+    cents: list[list[float]],
+    codebooks: list[list[list[float]]] | None,
+    m: int = PQ_M,
+    codes_k: int = PQ_K,
+    iters: int = PQ_ITERS,
+) -> tuple[DataFrame, list[list[list[float]]]]:
+    """IVF-PQ's ``encode`` step of the cell store: ``(vec_id, emb,
+    cell)`` rows → ``(vec_id, codes, cell)``, the codes quantizing the
+    RESIDUAL x − ``cents[cell]``. The residuals are checkpointed once
+    (read by the encode and the cell join); with ``codebooks`` None (a
+    fresh land) they are first trained on them (``m``, ``codes_k``,
+    ``iters`` as in :func:`train_pq_codebooks`). Returns the coded rows
+    and the codebooks used."""
+    res = cells.select(
+        "vec_id", "cell", _residual_col(cents).alias("emb")
+    ).localCheckpoint()
+    if codebooks is None:
+        codebooks = train_pq_codebooks(
+            res.select("vec_id", "emb"), len(cents[0]), m, codes_k, iters
+        )
+    coded = pq_encode(res.select("vec_id", "emb"), codebooks).join(
+        res.select("vec_id", "cell"), "vec_id"
+    )
+    return coded, codebooks
+
+
+def _residual_col(cents: list[list[float]]) -> Column:
     """x − centroid(cell) as one static codegen projection: the
     centroid table folds in as a literal indexed by the row's cell —
     ncells×dim literal doubles, far below the expression sizes that
@@ -532,7 +528,6 @@ def _residual_col(cents: list[list[float]], dim: int) -> Column:
     elementwise subtraction (no fold) stays bit-identical."""
     from mapreducekmean_spark.functions.vector import centroid_literal_sql
 
-    del dim  # width is carried by the arrays themselves
     return F.expr(
         f"zip_with(emb, element_at({centroid_literal_sql(cents)}, "
         "CAST(cell + 1 AS INT)), (x, y) -> x - y)"
@@ -883,9 +878,9 @@ def rebalance_ivfpq_cells(
     train_iters: int = 2,
 ) -> dict[str, int]:
     """Split oversized cells of a landed IVF-PQ index in place — the
-    maintenance parity the compressed store was missing (the raw-IVF
-    twin is ``similarity.rebalance_ivf_cells``, docstring there for the
-    hot-cell rationale). A PQ cell's codes encode the RESIDUAL
+    cell-store rebalance of ``similarity.rebalance_ivf_cells`` (same
+    split, tombstones, crash-safe ordering and stats), with the moved
+    rows re-encoded. A PQ cell's codes encode the RESIDUAL
     x − centroid(cell), so moving rows to new sub-cells cannot reuse
     their codes: the moved rows' residuals change basis. The split is
     therefore computed on RAW vectors from ``raw`` — the paired
@@ -893,28 +888,9 @@ def rebalance_ivfpq_cells(
     c are read from exactly its ``cell=c`` directory, partition-
     pruned) or a caller-supplied ``(vec_id, emb)`` DataFrame — and the
     moved rows are RE-ENCODED against their new sub-centroids with the
-    index's FROZEN codebooks. Untouched cells keep their ids, codes,
-    and files; cost scales with the hot cells' row counts.
-
-    Coverage is CHECKED per hot cell (every vec_id of the cell must
-    have a raw vector; count + anti-join probe, bounded by the hot
-    cell) and refused actionably otherwise — silently encoding only
-    the covered subset would drop rows from the index.
-
-    Oversized sub-cells split AGAIN before anything lands (in-memory
-    recursion on the raw rows, unlike the raw twin's write-then-rescan
-    passes — the raw source is only pairable at the ORIGINAL cell
-    granularity, so all splitting happens while those rows are at
-    hand). Same no-progress refusal as the raw twin.
-
-    Crash-safe by the raw twin's ordering, all windows convergent on
-    rerun: (1) orphan ``cell=`` dirs past the table / tombstoned are
-    removed first; (2) new sub-cell partitions land additively at ids
-    past the table (invisible to every query); (3) the centroid table
-    swaps via temp-dir + rename (``load_index_centroids`` completes
-    the window); (4) retired dirs delete last. Retired ids are
-    TOMBSTONED (+inf centroid) to keep the id space dense — consumers
-    map centroid-list position to cell id.
+    index's FROZEN codebooks (:func:`_encode_cells`). Untouched cells
+    keep their ids, codes, and files; cost scales with the hot cells'
+    row counts. A raw source that does not cover a hot cell is refused.
 
     Post-rebalance the layout equals a FRESH
     ``land_ivfpq_index_points`` under (rebalanced centroids, frozen
@@ -931,11 +907,7 @@ def rebalance_ivfpq_cells(
     Returns ``{"split_cells": n, "new_cells": m, "passes": p}``
     (passes = Lloyd splits run, counting re-splits of oversized
     sub-cells)."""
-    import math
     import os
-    import shutil
-
-    from mapreducekmean_spark.sources.bucketing import write_partitioned
 
     if max_cell_rows is None:
         max_cell_rows = SEM_DUP_MAX_CELL
@@ -946,132 +918,8 @@ def rebalance_ivfpq_cells(
             "similarity.rebalance_ivf_cells."
         )
     cents, codebooks = _load_ivfpq_params(spark, path)
-    n_cents = len(cents)
-    dim = len(codebooks[0][0]) * len(codebooks)
-    cells_dir = f"{path}/cells"
-    tombstoned = {i for i, c in enumerate(cents) if c and math.isinf(c[0])}
-    # (1) convergent cleanup of any crashed prior rebalance
-    for d in os.listdir(cells_dir):
-        if not d.startswith("cell="):
-            continue
-        cid = int(d.split("=", 1)[1])
-        if cid >= n_cents or cid in tombstoned:
-            shutil.rmtree(os.path.join(cells_dir, d))
-    sizes = (
-        spark.read.parquet(cells_dir)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > max_cell_rows)
-        .collect()
-    )  # bounded: ≤ ncells driver rows
-    if not sizes:
-        return {"split_cells": 0, "new_cells": 0, "passes": 0}
-
-    raw_is_path = isinstance(raw, str)
-    passes = 0
-    next_id = n_cents
-    retired: list[int] = []
-    added: list[list[float]] = []
-    moved_frames: list[DataFrame] = []
-    for r in sizes:
-        c, n = int(r["cell"]), int(r["n"])
-        ids_c = (
-            spark.read.parquet(cells_dir)
-            .filter(F.col("cell") == c)
-            .select("vec_id")
-        )
-        if raw_is_path:
-            raw_rows = (
-                spark.read.parquet(f"{raw}/cells")
-                .filter(F.col("cell") == c)
-                .select("vec_id", "emb")
-            )
-        else:
-            raw_rows = raw.select("vec_id", "emb").join(ids_c, "vec_id")
-        raw_rows = raw_rows.localCheckpoint()
-        if raw_rows.count() != n or ids_c.join(
-            raw_rows.select("vec_id"), "vec_id", "left_anti"
-        ).take(1):
-            raise ValueError(
-                f"rebalance_ivfpq_cells: the raw source does not cover "
-                f"cell {c} (needs every one of its {n} vec_ids with a "
-                f"raw vector). Pass the PAIRED raw-IVF store's path "
-                f"(landed under the same coarse centroids) or a "
-                f"(vec_id, emb) frame covering the corpus."
-            )
-        # in-memory recursive split until every sub-cell fits
-        work: list[tuple[DataFrame, int]] = [(raw_rows, n)]
-        while work:
-            rows, nn = work.pop()
-            k = 2 * math.ceil(nn / max_cell_rows)
-            passes += 1
-            try:
-                sub = km.lloyd(rows, k=k, max_iter=train_iters).centroids
-            except ValueError as e:
-                raise ValueError(
-                    f"rebalance_ivfpq_cells cannot split cell {c}: {e} "
-                    f"— an unsplittable hot cell means near/byte-"
-                    f"identical embedding mass; run exact dedup before "
-                    f"indexing."
-                ) from e
-            assigned = km.assign(rows, sub).localCheckpoint()
-            counts = {
-                int(x["cluster_id"]): int(x["n"])
-                for x in assigned.groupBy("cluster_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            if max(counts.values()) >= nn:
-                raise ValueError(
-                    f"rebalance_ivfpq_cells: cell {c}'s {k}-way split "
-                    f"made no progress (largest sub-cell keeps all {nn} "
-                    f"rows) — near/byte-identical embedding mass; run "
-                    f"exact/semantic dedup on the corpus before indexing."
-                )
-            for j in range(len(sub)):
-                nj = counts.get(j, 0)
-                rows_j = assigned.filter(F.col("cluster_id") == j).select(
-                    "vec_id", "emb"
-                )
-                if nj > max_cell_rows:
-                    work.append((rows_j, nj))
-                else:
-                    # final sub-cell (possibly empty — keeps the raw
-                    # twin's convention of landing every sub centroid)
-                    moved_frames.append(
-                        rows_j.withColumn(
-                            "cell", F.lit(next_id).cast("bigint")
-                        )
-                    )
-                    added.append([float(v) for v in sub[j]])
-                    next_id += 1
-        retired.append(c)
-    # (2) re-encode moved rows against their new sub-centroids with the
-    # FROZEN codebooks, land additively at ids past the table
-    moved = moved_frames[0]
-    for f_ in moved_frames[1:]:
-        moved = moved.unionByName(f_)
-    tomb = [float("inf")] * dim
-    final = [
-        tomb if i in set(retired) else [float(v) for v in cents[i]]
-        for i in range(n_cents)
-    ] + added
-    res = moved.select(
-        "vec_id", "cell", _residual_col(final, dim).alias("emb")
+    return _rebalance_cells(
+        spark, path, cents, raw, max_cell_rows, train_iters,
+        "rebalance_ivfpq_cells",
+        lambda cells, cents: _encode_cells(cells, cents, codebooks)[0],
     )
-    coded = pq_encode(res.select("vec_id", "emb"), codebooks).join(
-        res.select("vec_id", "cell"), "vec_id"
-    )
-    write_partitioned(
-        coded.repartition("cell"), cells_dir, "cell", mode="append"
-    )
-    # (3) swap the centroid table (load completes the rename window)
-    save_index_centroids(spark, path, final)
-    # (4) retired directories last (tombstoned since the swap)
-    for c in retired:
-        shutil.rmtree(os.path.join(cells_dir, f"cell={c}"))
-    return {
-        "split_cells": len(retired),
-        "new_cells": len(added),
-        "passes": passes,
-    }

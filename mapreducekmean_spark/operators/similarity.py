@@ -22,6 +22,15 @@ Every ANN and retrieval query (here, in ``pq.py`` and in ``search.py``)
 ends in the same tail: score candidate pairs, then keep each query's
 best k with :func:`top_k_per_query` — the one per-query rank cut. The
 cosine paths share :func:`_sim_topk` on top of it.
+
+The IVF cell store (``cells/cell=<id>/`` directories plus the
+``centroids`` table) is owned here, for the raw index and IVF-PQ
+alike: :func:`_bucket` tags points with their cell, and
+:func:`_land_cells`, :func:`_append_cells` and :func:`_rebalance_cells`
+hold the one land, append and rebalance, all writing through
+:func:`_write_cells`. A store whose rows are not raw vectors passes an
+``encode(cells, cents)`` step — IVF-PQ's residual encode
+(``pq._encode_cells``) is the only one.
 """
 
 from __future__ import annotations
@@ -106,6 +115,15 @@ def _sim_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _bucket(pts: DataFrame, cents: list[list[float]]) -> DataFrame:
+    """``(vec_id, emb, cell)``: every point tagged with its nearest
+    centroid's index (``km.assign``'s first-wins argmin) — the coarse
+    quantization behind every cell-store write and in-session probe."""
+    return km.assign(pts, cents).select(
+        "vec_id", "emb", F.col("cluster_id").alias("cell")
+    )
+
+
 def ivf_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -118,11 +136,8 @@ def ivf_topk(
     cells, brute-force only within those cells."""
     qs, pts = _queries_and_points(spark, sf_dir)
     cents = km.init_centroids(spark, sf_dir, ncells)
-    bucketed = km.assign(pts, cents).select(
-        "vec_id", "emb", F.col("cluster_id").alias("cell")
-    )
     q_cells = _probe_cells(qs, cents, ncells, nprobe)
-    return _score_probed_cells(bucketed, q_cells, k)
+    return _score_probed_cells(_bucket(pts, cents), q_cells, k)
 
 
 def _probe_cells(
@@ -381,16 +396,23 @@ def land_ivf_index_points(
     and hurts recall (probe budget spent on one huge region). Training
     is a land-time-only cost; append/query paths freeze whatever
     quantizer the land chose."""
+    _land_cells(spark, pts, path, ncells, cents, train_iters)
+
+
+def _write_cells(
+    path: str,
+    cells: DataFrame,
+    cents: list[list[float]],
+    encode=None,
+    mode: str = "append",
+) -> None:
+    """The one cells-table write: ``(vec_id, emb, cell)`` rows, passed
+    through ``encode(cells, cents)`` when the store keeps another row
+    format, land in their ``cell=`` directories under ``path``."""
     from mapreducekmean_spark.sources.bucketing import write_partitioned
 
-    if cents is None:
-        if train_iters > 0:
-            cents = km.lloyd(pts, ncells, max_iter=train_iters).centroids
-        else:
-            cents = km.collect_centroids(km.deterministic_init(pts, ncells))
-    cells = km.assign(pts, cents).select(
-        "vec_id", "emb", F.col("cluster_id").alias("cell")
-    )
+    if encode is not None:
+        cells = encode(cells, cents)
     # repartition ON THE PARTITION KEY before the write: the input's
     # own partitioning is whatever the caller produced (a 1-partition
     # frame would serialize the whole land on one core — measured 259 s
@@ -398,9 +420,33 @@ def land_ivf_index_points(
     # cell puts each cell in exactly one task, so every land/append
     # emits exactly ONE file per touched cell — the append-friendly
     # grain the compactor restores
-    write_partitioned(cells.repartition("cell"), f"{path}/cells", "cell")
+    write_partitioned(
+        cells.repartition("cell"), f"{path}/cells", "cell", mode=mode
+    )
+
+
+def _land_cells(
+    spark: SparkSession,
+    pts: DataFrame,
+    path: str,
+    ncells: int,
+    cents: list[list[float]] | None,
+    train_iters: int,
+    encode=None,
+) -> None:
+    """The cell-store land behind :func:`land_ivf_index_points` and
+    ``pq.land_ivfpq_index_points``: pick the coarse quantizer (given,
+    Lloyd-trained or the deterministic k-sample), write the bucketed
+    cells, then the centroid table."""
+    if cents is None:
+        if train_iters > 0:
+            cents = km.lloyd(pts, ncells, max_iter=train_iters).centroids
+        else:
+            cents = km.collect_centroids(km.deterministic_init(pts, ncells))
+    _write_cells(path, _bucket(pts, cents), cents, encode, mode="overwrite")
     # consumers gate on the centroid table's existence
-    # (semantic_dedup_batch's first-batch land), so it lands last
+    # (semantic_dedup_batch's first-batch land), so it lands after the
+    # cells
     save_index_centroids(spark, path, cents)
 
 
@@ -474,20 +520,45 @@ def append_ivf_index(
     that single ``cell=`` directory is probed for the row — present
     means a prior attempt's append completed and the replay is a
     no-op. The probe reads one partition directory, never the index."""
-    cents = load_index_centroids(spark, path)
-    empty, already = batch_tail_already_in_cells(
-        spark, path, new_points, cents
-    )
-    if empty or already:
-        return  # nothing to append / replay of a completed batch
-    cells = km.assign(
-        new_points.select("vec_id", "emb"), cents
-    ).select("vec_id", "emb", F.col("cluster_id").alias("cell"))
-    from mapreducekmean_spark.sources.bucketing import write_partitioned
+    _append_cells(spark, new_points, path, load_index_centroids(spark, path))
 
-    # one task (and so one file) per touched cell — see land's comment
-    write_partitioned(
-        cells.repartition("cell"), f"{path}/cells", "cell", mode="append"
+
+def _append_cells(
+    spark: SparkSession,
+    new_points: DataFrame,
+    path: str,
+    cents: list[list[float]],
+    encode=None,
+) -> None:
+    """The cell-store append behind :func:`append_ivf_index` and
+    ``pq.append_ivfpq_index`` (replay guard in the former's docstring):
+    the batch, bucketed under the store's frozen ``cents``, is appended
+    unless it is empty or a replay."""
+    head = (
+        new_points.select("vec_id", "emb")
+        .orderBy(F.col("vec_id").desc())
+        .take(1)
+    )
+    if not head:
+        return  # nothing to append
+    max_id, max_emb = int(head[0]["vec_id"]), list(head[0]["emb"])
+    # km.assign's sequential-fold distance and first-wins tie-break, so
+    # the probe looks in the cell the append would write
+    max_cell = min(
+        range(len(cents)),
+        key=lambda i: (
+            sum((a - b) * (a - b) for a, b in zip(max_emb, cents[i])),
+            i,
+        ),
+    )
+    if (
+        spark.read.parquet(f"{path}/cells")
+        .filter((F.col("cell") == max_cell) & (F.col("vec_id") == max_id))
+        .take(1)
+    ):
+        return  # replay of a completed batch
+    _write_cells(
+        path, _bucket(new_points.select("vec_id", "emb"), cents), cents, encode
     )
 
 
@@ -501,41 +572,6 @@ def load_index_centroids(
     rebalance) before reading — see :func:`complete_swap`."""
     rows = spark.read.parquet(complete_swap(path, "centroids")).collect()
     return [r.centroid for r in sorted(rows, key=lambda r: r.cell)]
-
-
-def batch_tail_already_in_cells(
-    spark: SparkSession,
-    path: str,
-    new_points: DataFrame,
-    cents: list[list[float]],
-) -> tuple[bool, bool]:
-    """(batch is empty, batch tail already landed) — the shared replay
-    guard of the cell-partitioned appends: the batch's max vec_id is
-    quantized DRIVER-side (same sequential-fold distance and first-wins
-    tie-break as ``km.assign``, so the probe looks in the cell the
-    append would write) and that ONE ``cell=`` directory is probed for
-    the row."""
-    head = (
-        new_points.select("vec_id", "emb")
-        .orderBy(F.col("vec_id").desc())
-        .take(1)
-    )
-    if not head:
-        return True, False
-    max_id, max_emb = int(head[0]["vec_id"]), list(head[0]["emb"])
-    max_cell = min(
-        range(len(cents)),
-        key=lambda i: (
-            sum((a - b) * (a - b) for a, b in zip(max_emb, cents[i])),
-            i,
-        ),
-    )
-    already = bool(
-        spark.read.parquet(f"{path}/cells")
-        .filter((F.col("cell") == max_cell) & (F.col("vec_id") == max_id))
-        .take(1)
-    )
-    return False, already
 
 
 def ann_ivf_indexed_dpp(
@@ -622,6 +658,14 @@ def rebalance_ivf_cells(
     the new sub-cells take the next ids. A tombstone is an empty,
     unreachable slot, not a hazard.
 
+    A few Lloyd iterations on a hot Voronoi region don't guarantee
+    balanced sub-cells (measured: a 105k cell's 4-way split left a 77k
+    sub-cell on an isotropic corpus), so an oversized sub-cell splits
+    AGAIN, in memory, before anything lands; only final sub-cells take
+    ids. Refuses (actionably) only on NO PROGRESS — a split whose
+    largest sub-cell is the whole cell means near/byte-identical
+    embedding mass that no quantizer separates; run exact dedup first.
+
     Crash-safe by ordering + convergent rerun: (1) orphan cleanup —
     ``cell=`` directories past the centroid table's length, or whose
     centroid is a tombstone, are leftovers of a crashed prior rebalance
@@ -631,23 +675,14 @@ def rebalance_ivf_cells(
     rename-window crash); (4) retired directories delete last. A crash
     anywhere re-runs to the identical end state.
 
-    Runs PASSES until the bound holds: a few Lloyd iterations on a hot
-    Voronoi region don't guarantee balanced sub-cells (measured: a 105k
-    cell's 4-way split left a 77k sub-cell on an isotropic corpus), so
-    a still-oversized sub-cell simply splits again next pass. Refuses
-    (actionably) only on NO PROGRESS — a split whose largest sub-cell
-    is the whole cell means near/byte-identical embedding mass that no
-    quantizer separates; run exact dedup first.
-
-    Returns ``{"split_cells": n, "new_cells": m, "passes": p}``
-    (cumulative over passes; an already-split sub-cell that splits
-    again counts each time).
+    The engine is :func:`_rebalance_cells`, shared with
+    ``pq.rebalance_ivfpq_cells``; here the raw vectors of hot cell c
+    are the store's own ``cell=c`` directory. Returns
+    ``{"split_cells": n, "new_cells": m, "passes": p}``: retired
+    original cells, final sub-cells, and Lloyd splits run (re-splits
+    of oversized sub-cells included).
     """
-    import math
     import os
-    import shutil
-
-    from mapreducekmean_spark.sources.bucketing import write_partitioned
 
     if os.path.exists(f"{path}/codebooks"):
         raise ValueError(
@@ -662,97 +697,151 @@ def rebalance_ivf_cells(
             "codebooks; purge_ivf_keys remains safe either way (rows "
             "are removed, never re-celled)."
         )
+    cents = load_index_centroids(spark, path)
+    return _rebalance_cells(
+        spark, path, cents, path, max_cell_rows, train_iters,
+        "rebalance_ivf_cells",
+    )
+
+
+def _rebalance_cells(
+    spark: SparkSession,
+    path: str,
+    cents: list[list[float]],
+    raw,
+    max_cell_rows: int,
+    train_iters: int,
+    who: str,
+    encode=None,
+) -> dict[str, int]:
+    """The cell-store rebalance behind :func:`rebalance_ivf_cells` and
+    ``pq.rebalance_ivfpq_cells`` (algorithm, crash windows and stats in
+    the former's docstring). ``cents`` is the store's loaded centroid
+    list; ``raw`` supplies each hot cell's raw vectors — a raw-IVF
+    store path (cell c read from its ``cell=c`` directory) or a
+    ``(vec_id, emb)`` frame; ``who`` names the caller in refusals;
+    ``encode`` is the store's row format step (:func:`_write_cells`).
+
+    Coverage is CHECKED per hot cell (every vec_id of the cell must
+    have a raw vector; count + anti-join probe, bounded by the hot
+    cell) and refused otherwise — silently landing only the covered
+    subset would drop rows from the index. The split recurses on the
+    checkpointed raw rows rather than re-scanning landed sub-cells: a
+    separate raw source pairs with the store only at the ORIGINAL cell
+    granularity. Hot cells are walked in ascending id, so new ids never
+    depend on the aggregate's output order."""
+    import math
+    import os
+    import shutil
+    from functools import reduce
+
     cells_dir = f"{path}/cells"
-    total_split = 0
-    total_new = 0
+    n_cents = len(cents)
+    tombstoned = {i for i, c in enumerate(cents) if c and math.isinf(c[0])}
+    # (1) convergent cleanup of any crashed prior rebalance
+    for d in os.listdir(cells_dir):
+        if not d.startswith("cell="):
+            continue
+        cid = int(d.split("=", 1)[1])
+        if cid >= n_cents or cid in tombstoned:
+            shutil.rmtree(os.path.join(cells_dir, d))
+    hot = sorted(
+        (int(r["cell"]), int(r["n"]))
+        for r in spark.read.parquet(cells_dir)
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > max_cell_rows)
+        .collect()
+    )  # bounded: ≤ ncells driver rows
+    if not hot:
+        return {"split_cells": 0, "new_cells": 0, "passes": 0}
+
     passes = 0
-    while True:
-        cents = load_index_centroids(spark, path)
-        n_cents = len(cents)
-        tombstoned = {
-            i for i, c in enumerate(cents) if c and math.isinf(c[0])
-        }
-        # (1) convergent cleanup of any crashed prior rebalance/pass
-        for d in os.listdir(cells_dir):
-            if not d.startswith("cell="):
-                continue
-            cid = int(d.split("=", 1)[1])
-            if cid >= n_cents or cid in tombstoned:
-                shutil.rmtree(os.path.join(cells_dir, d))
-        sizes = (
+    retired: list[int] = []
+    added: list[list[float]] = []
+    moved: list[DataFrame] = []
+    for c, n in hot:
+        ids_c = (
             spark.read.parquet(cells_dir)
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_cell_rows)
-            .collect()
-        )  # bounded: ≤ ncells driver rows
-        if not sizes:
-            return {
-                "split_cells": total_split,
-                "new_cells": total_new,
-                "passes": passes,
-            }
-        passes += 1
-        dim = len(cents[0])
-        next_id = n_cents
-        retired: list[int] = []
-        added: list[list[float]] = []
-        for r in sizes:
-            c, n = int(r["cell"]), int(r["n"])
-            k = 2 * math.ceil(n / max_cell_rows)
-            cell_rows = (
-                spark.read.parquet(cells_dir)
+            .filter(F.col("cell") == c)
+            .select("vec_id")
+        )
+        if isinstance(raw, str):
+            raw_rows = (
+                spark.read.parquet(f"{raw}/cells")
                 .filter(F.col("cell") == c)
                 .select("vec_id", "emb")
             )
+        else:
+            raw_rows = raw.select("vec_id", "emb").join(ids_c, "vec_id")
+        raw_rows = raw_rows.localCheckpoint()
+        if raw_rows.count() != n or ids_c.join(
+            raw_rows.select("vec_id"), "vec_id", "left_anti"
+        ).take(1):
+            raise ValueError(
+                f"{who}: the raw source does not cover "
+                f"cell {c} (needs every one of its {n} vec_ids with a "
+                f"raw vector). Pass the PAIRED raw-IVF store's path "
+                f"(landed under the same coarse centroids) or a "
+                f"(vec_id, emb) frame covering the corpus."
+            )
+        work: list[tuple[DataFrame, int]] = [(raw_rows, n)]
+        while work:
+            rows, nn = work.pop()
+            k = 2 * math.ceil(nn / max_cell_rows)
+            passes += 1
             try:
-                sub = km.lloyd(
-                    cell_rows, k=k, max_iter=train_iters
-                ).centroids
+                sub = km.lloyd(rows, k=k, max_iter=train_iters).centroids
             except ValueError as e:
                 raise ValueError(
-                    f"rebalance_ivf_cells cannot split cell {c}: {e} — "
-                    f"an unsplittable hot cell means near/byte-identical "
-                    f"embedding mass; run exact dedup before indexing."
+                    f"{who} cannot split cell {c}: {e} — an unsplittable "
+                    f"hot cell means near/byte-identical embedding mass; "
+                    f"run exact dedup before indexing."
                 ) from e
-            assigned = km.assign(cell_rows, sub).select(
-                "vec_id",
-                "emb",
-                (F.col("cluster_id") + F.lit(next_id)).alias("cell"),
-            )
-            worst = (
-                assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-                .agg(F.max("n")).collect()[0][0]
-            )
-            if worst >= n:
+            assigned = km.assign(rows, sub).localCheckpoint()
+            counts = {
+                int(x["cluster_id"]): int(x["n"])
+                for x in assigned.groupBy("cluster_id")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            if max(counts.values()) >= nn:
                 raise ValueError(
-                    f"rebalance_ivf_cells: cell {c}'s {k}-way split made "
-                    f"no progress (largest sub-cell keeps all {n} rows) — "
+                    f"{who}: cell {c}'s {k}-way split made no progress "
+                    f"(largest sub-cell keeps all {nn} rows) — "
                     f"near/byte-identical embedding mass; run "
                     f"exact/semantic dedup on the corpus before indexing."
                 )
-            # (2) additive write: ids past the table until the swap
-            write_partitioned(
-                assigned.repartition("cell"), cells_dir, "cell",
-                mode="append",
-            )
-            added.extend(list(sc) for sc in sub)
-            next_id += k
-            retired.append(c)
-        # (3) swap the centroid table (the load side completes a crash
-        # inside the rename window)
-        tomb = [float("inf")] * dim
-        save_index_centroids(
-            spark,
-            path,
-            [tomb if i in set(retired) else c for i, c in enumerate(cents)]
-            + added,
-        )
-        # (4) retired directories last (tombstoned since the swap)
-        for c in retired:
-            shutil.rmtree(os.path.join(cells_dir, f"cell={c}"))
-        total_split += len(retired)
-        total_new += len(added)
+            for j, cent in enumerate(sub):
+                rows_j = assigned.filter(F.col("cluster_id") == j).select(
+                    "vec_id", "emb"
+                )
+                if counts.get(j, 0) > max_cell_rows:
+                    work.append((rows_j, counts[j]))
+                else:
+                    # a final sub-cell takes the next id, even when empty
+                    moved.append(
+                        rows_j.withColumn(
+                            "cell", F.lit(n_cents + len(added)).cast("bigint")
+                        )
+                    )
+                    added.append(cent)
+        retired.append(c)
+    tomb = [float("inf")] * len(cents[0])
+    final = [tomb if i in retired else c for i, c in enumerate(cents)] + added
+    # (2) additive write: ids past the table until the swap
+    _write_cells(path, reduce(DataFrame.unionByName, moved), final, encode)
+    # (3) swap the centroid table (the load side completes a crash
+    # inside the rename window)
+    save_index_centroids(spark, path, final)
+    # (4) retired directories last (tombstoned since the swap)
+    for c in retired:
+        shutil.rmtree(os.path.join(cells_dir, f"cell={c}"))
+    return {
+        "split_cells": len(retired),
+        "new_cells": len(added),
+        "passes": passes,
+    }
 
 
 def ann_ivf_indexed(
@@ -864,22 +953,22 @@ def embedding_near_dup(
     return out.select("id_a", "id_b", F.round("sim_raw", 6).alias("sim"))
 
 
-def _sem_dup_of(ids, mat, tau: float, target_idx=None):
+def _sem_dup_of(ids, mat, tau: float, target_idx):
     """The SemDeDup pair kernel over one cell block: for each target row
-    (default: all rows), the smallest LOWER id whose cosine reaches
-    ``tau``, or an int64 sentinel meaning kept. ``ids``/``mat`` must be
-    id-sorted. Every dot product accumulates per-dimension in index
-    order (one fused multiply-add per dim across the whole block) — the
-    identical IEEE sequence as ``functions/vector.py``'s fold and the
-    DuckDB twin's ``list_sum``, so the ``sim >= tau`` verdict is
-    bit-identical regardless of which columns are kept. Shared by the
-    full in-session pass and the incremental delta so the arithmetic
-    cannot drift; row blocks of 1024 bound the pair matrix."""
+    (positions ``target_idx`` of the block), the smallest LOWER id whose
+    cosine reaches ``tau``, or an int64 sentinel meaning kept.
+    ``ids``/``mat`` must be id-sorted. Every dot product accumulates
+    per-dimension in index order (one fused multiply-add per dim across
+    the whole block) — the identical IEEE sequence as
+    ``functions/vector.py``'s fold and the DuckDB twin's ``list_sum``,
+    so the ``sim >= tau`` verdict is bit-identical regardless of which
+    columns are kept. Shared by the full in-session pass and the
+    incremental delta (through :func:`_sem_dedup_cells`) so the
+    arithmetic cannot drift; row blocks of 1024 bound the pair
+    matrix."""
     import numpy as np
 
     n, dim = mat.shape
-    if target_idx is None:
-        target_idx = np.arange(n)
     tm = mat[target_idx]
     tids = ids[target_idx]
     ssq = np.zeros(n)
@@ -939,15 +1028,10 @@ def semantic_dedup(
     tells the caller to raise ``ncells`` — the published SemDeDup recipe
     sizes k so cells hold a roughly constant row count.
     """
-    import numpy as np
-    import pandas as pd
-
     pts = km.embeddings(spark, sf_dir).select("vec_id", "emb")
     if cents is None:
         cents = km.init_centroids(spark, sf_dir, ncells)
-    bucketed = km.assign(pts, cents).select(
-        "vec_id", "emb", F.col("cluster_id").alias("cell")
-    )
+    bucketed = _bucket(pts, cents)
     oversized = (
         bucketed.groupBy("cell")
         .count()
@@ -966,18 +1050,35 @@ def semantic_dedup(
             f"(currently {ncells}) so cells stay bounded; k should track "
             f"n / target_cell_rows."
         )
+    return _sem_dedup_cells(bucketed.withColumn("target", F.lit(True)), tau)
+
+
+def _sem_dedup_cells(rows: DataFrame, tau: float) -> DataFrame:
+    """The SemDeDup cell kernel shared by :func:`semantic_dedup` (every
+    row a target) and :func:`semantic_dedup_delta` (batch rows only):
+    one ``applyInPandas`` group per cell of ``(vec_id, emb, cell,
+    target)`` rows, emitting ``(vec_id, cell, kept, dup_of)`` for the
+    target rows — ``dup_of`` is the smallest lower-id cellmate, target
+    or not, with cosine >= ``tau`` (:func:`_sem_dup_of`)."""
+    import numpy as np
+    import pandas as pd
+
+    from mapreducekmean_spark.shipping import ship_package
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.argsort(pdf["vec_id"].to_numpy())
         ids = pdf["vec_id"].to_numpy()[order]
-        mat = np.array([list(e) for e in pdf["emb"].to_numpy()[order]],
-                       dtype=np.float64)
-        dup_of, sentinel = _sem_dup_of(ids, mat, tau)
+        mat = np.array(
+            [list(e) for e in pdf["emb"].to_numpy()[order]],
+            dtype=np.float64,
+        )
+        target_idx = np.where(pdf["target"].to_numpy()[order])[0]
+        dup_of, sentinel = _sem_dup_of(ids, mat, tau, target_idx)
         kept = dup_of == sentinel
         return pd.DataFrame(
             {
-                "vec_id": ids,
-                "cell": pdf["cell"].to_numpy()[order],
+                "vec_id": ids[target_idx],
+                "cell": pdf["cell"].to_numpy()[order][target_idx],
                 "kept": kept,
                 "dup_of": [
                     None if k else int(v) for k, v in zip(kept, dup_of)
@@ -985,10 +1086,8 @@ def semantic_dedup(
             }
         )
 
-    from mapreducekmean_spark.shipping import ship_package
-
-    ship_package(spark)
-    return bucketed.groupBy("cell").applyInPandas(
+    ship_package(rows.sparkSession)
+    return rows.groupBy("cell").applyInPandas(
         per_cell, "vec_id bigint, cell bigint, kept boolean, dup_of bigint"
     )
 
@@ -1040,15 +1139,8 @@ def semantic_dedup_delta(
 
     Output: ``(vec_id, cell, kept, dup_of)`` for the batch rows only.
     """
-    import numpy as np
-    import pandas as pd
-
     cents = load_index_centroids(spark, path)
-    b = (
-        km.assign(batch.select("vec_id", "emb"), cents)
-        .select("vec_id", "emb", F.col("cluster_id").alias("cell"))
-        .localCheckpoint()
-    )
+    b = _bucket(batch.select("vec_id", "emb"), cents).localCheckpoint()
     touched = sorted(
         int(r.cell) for r in b.select("cell").distinct().collect()
     )  # bounded: ≤ ncells driver rows
@@ -1144,36 +1236,11 @@ def semantic_dedup_delta(
             f"(splits hot cells in place) or re-land with more ncells."
         )
 
-    both = landed.withColumn("is_new", F.lit(False)).unionByName(
-        b.withColumn("is_new", F.lit(True))
-    )
-
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order]
-        mat = np.array(
-            [list(e) for e in pdf["emb"].to_numpy()[order]],
-            dtype=np.float64,
-        )
-        target_idx = np.where(pdf["is_new"].to_numpy()[order])[0]
-        dup_of, sentinel = _sem_dup_of(ids, mat, tau, target_idx)
-        kept = dup_of == sentinel
-        return pd.DataFrame(
-            {
-                "vec_id": ids[target_idx],
-                "cell": pdf["cell"].to_numpy()[order][target_idx],
-                "kept": kept,
-                "dup_of": [
-                    None if k else int(v) for k, v in zip(kept, dup_of)
-                ],
-            }
-        )
-
-    from mapreducekmean_spark.shipping import ship_package
-
-    ship_package(spark)
-    return both.groupBy("cell").applyInPandas(
-        per_cell, "vec_id bigint, cell bigint, kept boolean, dup_of bigint"
+    return _sem_dedup_cells(
+        landed.withColumn("target", F.lit(False)).unionByName(
+            b.withColumn("target", F.lit(True))
+        ),
+        tau,
     )
 
 
@@ -1556,12 +1623,9 @@ def ann_recall_curve(
     )
     qs, pts = _queries_and_points(spark, sf_dir)
     cents = km.init_centroids(spark, sf_dir, ncells)
-    bucketed = km.assign(pts, cents).select(
-        "vec_id", "emb", F.col("cluster_id").alias("cell")
-    )
     max_np = max(int(x) for x in nprobes)
     q_cells = _probe_cells(qs, cents, ncells, max_np, with_rank=True)
-    cands = bucketed.join(F.broadcast(q_cells), "cell").filter(
+    cands = _bucket(pts, cents).join(F.broadcast(q_cells), "cell").filter(
         F.col("vec_id") != F.col("q_id")
     )
     scored = _score_candidates(cands, extra=("probe_rank",)).localCheckpoint()

@@ -1370,8 +1370,12 @@ def probe_rebalance(spark, results: dict, n_vecs: int = 500_000) -> None:
     one Voronoi cell holding ~21% of 500k vectors (the semdelta probe's
     original failure). Land that exact shape, rebalance with a 50k-row
     bound, and verify at volume: every row preserved, every cell within
-    bound, retired ids tombstoned, and the cost tracked the hot cells'
-    rows (reported), not the index."""
+    bound, one tombstone per retired original cell, and the cost
+    tracked the hot cells' rows (reported), not the index. A sub-cell
+    still over the bound after a split re-splits in memory before
+    anything lands, so ``passes`` (Lloyd splits) can exceed
+    ``split_cells`` (retired cells); ``new_cells`` counts final
+    sub-cells."""
     import math
 
     from mapreducekmean_spark.operators import kmeans as km
@@ -1430,6 +1434,7 @@ def probe_rebalance(spark, results: dict, n_vecs: int = 500_000) -> None:
         "hot_rows": int(before[1] or 0),
         "split_cells": res["split_cells"],
         "new_cells": res["new_cells"],
+        "passes": res["passes"],
         "max_after": int(after["mx"]),
         "sec": round(dt, 2),
     }

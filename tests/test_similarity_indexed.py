@@ -4,6 +4,7 @@ family (BM25 term-bucketed postings, dedup band-bucketed signatures)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreducekmean_spark.operators.similarity import (
@@ -621,6 +622,82 @@ def test_rebalance_refuses_identical_mass(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="dedup"):
         rebalance_ivf_cells(spark, path, max_cell_rows=50)
+
+
+def _resplit_frame(spark, n=200, bound=50, dim=8):
+    """``n`` rows forming one cell whose FIRST split must leave a
+    sub-cell over ``bound``: the k = 2·ceil(n/bound) md5-first vec_ids
+    (Lloyd's deterministic seeds) are outliers on axis 0 — the nearest
+    100 away, the rest 1000 apart — and every other row sits on a unit
+    segment of axis 1, so all of them fall to the nearest outlier's
+    sub-cell. Every row is distinct, so a re-split makes progress."""
+    import hashlib
+    import math
+
+    k = 2 * math.ceil(n / bound)
+    seeds = sorted(
+        range(n), key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
+    )[:k]
+    rank = {v: j for j, v in enumerate(seeds)}
+    rows = []
+    for i in range(n):
+        emb = [0.0] * dim
+        if i in rank:
+            emb[0] = 100.0 + 1000.0 * rank[i]
+        else:
+            emb[1] = i / n
+        rows.append((i, emb))
+    return spark.createDataFrame(rows, "vec_id bigint, emb array<double>")
+
+
+@pytest.mark.parametrize("store", ["raw", "pq"])
+def test_rebalance_resplits_oversized_subcell(spark, tmp_path, store):
+    """The re-split branch of the shared rebalance, on both stores: a
+    first split that leaves a sub-cell over the bound splits it again
+    before anything lands — more Lloyd splits than retired cells, the
+    bound holds, every vec_id is kept exactly once, only the original
+    cell is tombstoned, and a second call finds nothing to do."""
+    import math
+
+    from mapreducekmean_spark.operators.pq import (
+        land_ivfpq_index_points,
+        rebalance_ivfpq_cells,
+    )
+    from mapreducekmean_spark.operators.similarity import (
+        land_ivf_index_points,
+        load_index_centroids,
+        rebalance_ivf_cells,
+    )
+
+    pts = _resplit_frame(spark)
+    cents = [[0.0] * 8, [1e6] * 8]  # every row lands in cell 0
+    path = str(tmp_path / "idx")
+    if store == "raw":
+        land_ivf_index_points(spark, pts, path, cents=cents)
+
+        def rebalance():
+            return rebalance_ivf_cells(spark, path, max_cell_rows=50)
+    else:
+        raw_path = str(tmp_path / "raw")
+        land_ivfpq_index_points(spark, pts, path, cents=cents)
+        land_ivf_index_points(spark, pts, raw_path, cents=cents)
+
+        def rebalance():
+            return rebalance_ivfpq_cells(
+                spark, path, raw_path, max_cell_rows=50
+            )
+
+    res = rebalance()
+    assert res["passes"] > res["split_cells"] == 1
+    cells = spark.read.parquet(f"{path}/cells")
+    sizes = [r["count"] for r in cells.groupBy("cell").count().collect()]
+    assert max(sizes) <= 50
+    ids = sorted(r.vec_id for r in cells.select("vec_id").collect())
+    assert ids == list(range(200))
+    after = load_index_centroids(spark, path)
+    assert sum(math.isinf(c[0]) for c in after) == res["split_cells"]
+    assert len(after) == len(cents) + res["new_cells"]
+    assert rebalance() == {"split_cells": 0, "new_cells": 0, "passes": 0}
 
 
 def test_semantic_dedup_delta_recovers_after_rebalance(
