@@ -23,6 +23,7 @@ no global state.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -391,42 +392,84 @@ def cdc_merge_stream_batch(
 ) -> None:
     """One micro-batch of the streaming MERGE — the ``foreachBatch``
     body of ``streaming.jobs.stream_cdc_merge``, public so tests and
-    batch backfills drive the same code path. Batch-id replay guard
-    (the foreachBatch idempotency contract): a batch at or below the
-    high-water mark is a restart replay and must no-op — the mark
-    advances only after the merge completes, so a crash mid-merge
-    replays into a partially-updated snapshot, which is safe because
-    re-merging the same collapsed batch is idempotent (same final row
-    per key, same partitions rewritten). Cross-batch ordering needs no
-    seq namespacing: batches apply sequentially, so a later batch's
-    change wins by arriving later.
-
-    The marker write is crash-safe: temp file + ``os.replace`` (atomic
-    on POSIX), and an unreadable/torn marker reads as ABSENT (mark -1)
-    rather than raising — the worst case is one extra idempotent
-    re-merge, never a wedged stream."""
-    marker = os.path.join(path, "_cdc_high_water")
-    if batch_id <= _read_high_water(marker):
-        return
-    batch_df = batch_df.localCheckpoint()
-    if batch_df.take(1):
-        merge_into_snapshot(spark, batch_df, path, seq=seq, op=op)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(int(batch_id)))
-    os.replace(tmp, marker)
+    batch backfills drive the same code path. It runs under
+    :func:`_guarded_batch` (the replay contract, ``_cdc_high_water``
+    marker): a crash mid-merge replays into a partially-updated
+    snapshot, which is safe because re-merging the same collapsed
+    batch is idempotent (same final row per key, same partitions
+    rewritten). Cross-batch ordering needs no seq namespacing: batches
+    apply sequentially, so a later batch's change wins by arriving
+    later."""
+    _guarded_batch(
+        batch_df,
+        batch_id,
+        os.path.join(path, "_cdc_high_water"),
+        lambda df: merge_into_snapshot(spark, df, path, seq=seq, op=op),
+    )
 
 
 def _read_high_water(marker: str) -> int:
     """Batch-id high-water mark, tolerant of absence and torn writes
     (both read as -1: 'nothing applied yet', the safe direction —
-    re-merging an applied batch is idempotent, skipping an unapplied
+    re-applying an applied batch is idempotent, skipping an unapplied
     one would lose data)."""
     try:
         with open(marker) as f:
             return int(f.read().strip())
     except (FileNotFoundError, ValueError):
         return -1
+
+
+def _advance_high_water(marker: str, batch_id: int) -> None:
+    """Record ``batch_id`` as applied: temp file + ``os.replace``, atomic
+    on POSIX, so a crash mid-write leaves the old marker, never a torn
+    one."""
+    tmp = marker + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(str(int(batch_id)))
+    os.replace(tmp, marker)
+
+
+def _guarded_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    marker: str,
+    apply: Callable[[DataFrame], object],
+) -> None:
+    """Run one ``foreachBatch`` body under the batch-id replay guard.
+    This is the replay contract of every stream here that keeps durable
+    state (the dedup, chunk and semantic ingests, the CDC merge and the
+    maintained aggregates):
+
+    1. Structured Streaming delivers micro-batches at least once: a
+       restart re-delivers the batch in flight under the SAME id. The
+       store keeps a high-water marker file, the last batch id applied,
+       and a batch at or below it is a replay of a completed batch and
+       no-ops.
+    2. The batch materializes once (``localCheckpoint``), so the body's
+       several actions read one snapshot of the source.
+    3. A non-empty batch runs ``apply``; an empty one only advances the
+       marker.
+    4. The marker advances LAST, after ``apply`` returns, so a crash
+       anywhere inside replays the batch. Every step of ``apply`` must
+       therefore be idempotent on re-run: partition upserts replace,
+       index appends carry content-checked guards, aggregate folds
+       carry a per-key watermark.
+
+    The marker write is atomic (:func:`_advance_high_water`) and a torn
+    or absent marker reads as -1 (:func:`_read_high_water`): the worst
+    case is one extra idempotent re-run, never a wedged stream. Batch
+    ids are durable only with the runner's ``<store>/_checkpoint``
+    (``streaming.jobs._drain``). Without it a restarted stream would
+    restart ids at 0, read every batch of new data as a replay and
+    silently no-op it; with it a restart resumes from the logged offset
+    and replays at most the one in-flight batch."""
+    if batch_id <= _read_high_water(marker):
+        return
+    batch_df = batch_df.localCheckpoint()
+    if batch_df.take(1):
+        apply(batch_df)
+    _advance_high_water(marker, batch_id)
 
 
 def land_agg_snapshot(
@@ -513,12 +556,12 @@ def apply_agg_delta(
     aggregate's size; ``batch_id`` must increase across batches (the
     foreachBatch contract — :func:`agg_stream_batch` wires it).
 
-    Replay is O(1), not just read-only (r14): a ``_agg_applied``
-    batch-id marker (atomic temp + ``os.replace``, the
-    ``_cdc_high_water`` discipline) advances only AFTER the fold
-    commits, so an at-least-once re-delivery of an applied batch
-    skips before even computing the batch's delta aggregate — at
-    volume that aggregate is the expensive part of a replay. The
+    Replay is O(1), not just read-only (r14): an ``_agg_applied``
+    batch-id marker (read and advanced like :func:`_guarded_batch`'s)
+    advances only AFTER the fold commits, so an at-least-once
+    re-delivery of an applied batch skips before even computing the
+    batch's delta aggregate — at volume that aggregate is the
+    expensive part of a replay. The
     marker is an optimization layered ON the per-key ``last_bid``
     watermark, never a substitute: a crash anywhere before the marker
     write (including mid-bucket-swap) leaves the marker behind, the
@@ -535,13 +578,6 @@ def apply_agg_delta(
     marker = os.path.join(path, "_agg_applied")
     if batch_id <= _read_high_water(marker):
         return {"touched_buckets": 0, "rows_written": 0}
-
-    def _advance_marker() -> None:
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(int(batch_id)))
-        os.replace(tmp, marker)
-
     with open(os.path.join(path, "_agg_meta.json")) as f:
         meta = json.load(f)
     key, sums, n_buckets = meta["key"], meta["sums"], meta["n_buckets"]
@@ -580,7 +616,7 @@ def apply_agg_delta(
         # fully applied but the marker lagged (e.g. crash after the
         # swap, before the marker write): advance it so the NEXT
         # replay is O(1) instead of re-probing.
-        _advance_marker()
+        _advance_high_water(marker, batch_id)
         return {"touched_buckets": len(touched), "rows_written": 0}
     l = landed.alias("l")
     d = delta.alias("d")
@@ -651,7 +687,7 @@ def apply_agg_delta(
     )
     upsert_partitions(merged, path, "kb")
     n_written = int(_obs_rows.get["n"])
-    _advance_marker()
+    _advance_high_water(marker, batch_id)
     return {
         "touched_buckets": len(touched),
         "rows_written": n_written,
@@ -669,25 +705,20 @@ def agg_stream_batch(
     batch_id: int,
     path: str,
 ) -> None:
-    """``foreachBatch`` body for a STREAMED incremental aggregate —
-    same marker discipline as :func:`cdc_merge_stream_batch` (atomic
-    temp + ``os.replace``; a batch at or below the high-water mark
-    no-ops), with the per-key ``last_bid`` watermark underneath
-    covering the window the marker cannot: a crash after a PARTIAL
-    bucket swap replays into mixed state and still converges, because
-    already-updated keys sit at ``last_bid == batch_id`` and are not
-    re-added. Streaming batch ids start at 0; the land owns bid 0, so
-    the stream's ids are shifted by +1."""
-    marker = os.path.join(path, "_agg_high_water")
-    if batch_id <= _read_high_water(marker):
-        return
-    batch_df = batch_df.localCheckpoint()
-    if batch_df.take(1):
-        apply_agg_delta(spark, batch_df, path, batch_id=batch_id + 1)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(int(batch_id)))
-    os.replace(tmp, marker)
+    """``foreachBatch`` body for a STREAMED incremental aggregate, run
+    under :func:`_guarded_batch` (the replay contract,
+    ``_agg_high_water`` marker). The per-key ``last_bid`` watermark
+    underneath covers the window the marker cannot: a crash after a
+    PARTIAL bucket swap replays into mixed state and still converges,
+    because already-updated keys sit at ``last_bid == batch_id`` and
+    are not re-added. Streaming batch ids start at 0; the land owns
+    bid 0, so the stream's ids are shifted by +1."""
+    _guarded_batch(
+        batch_df,
+        batch_id,
+        os.path.join(path, "_agg_high_water"),
+        lambda df: apply_agg_delta(spark, df, path, batch_id=batch_id + 1),
+    )
 
 
 def purge_snapshot_keys(

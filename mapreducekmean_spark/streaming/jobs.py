@@ -1,9 +1,10 @@
-"""Streaming jobs: model scoring, windowed aggregation, stateful sessions."""
+"""Streaming jobs: sources, stateless and stateful stream transforms,
+driver-side running models, and the runners that drain them."""
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from mapreducekmean_spark.functions.vector import as_double_array
+from mapreducekmean_spark.operators.cdc import _guarded_batch
 from mapreducekmean_spark.operators.events import SESSION_GAP_US
 from mapreducekmean_spark.operators.kmeans import (
     assign,
@@ -79,6 +81,32 @@ def normalize_event_ts(raw: DataFrame, col: str = "ts") -> DataFrame:
     if dtype == "timestamp_ntz":
         return raw.withColumn(col, F.to_utc_timestamp(F.col(col), "UTC"))
     return raw
+
+
+def _drain(
+    stream_df: DataFrame,
+    batch_fn: Callable[[DataFrame, int], None] | None = None,
+    store: str | None = None,
+    **start,
+) -> None:
+    """Run a stream until its available input is consumed, then stop it:
+    the synchronous local-harness form of every runner here (production
+    leaves the query running). ``batch_fn`` is the ``foreachBatch``
+    body. ``store`` is the durable state directory of a body under the
+    replay guard; its ``<store>/_checkpoint`` keeps batch ids monotone
+    across driver restarts (:func:`operators.cdc._guarded_batch`).
+    ``start`` goes to ``DataStreamWriter.start`` (sink format, path,
+    query name, options); the output mode defaults to update."""
+    w = stream_df.writeStream
+    if store is not None:
+        w = w.option("checkpointLocation", os.path.join(store, "_checkpoint"))
+    if batch_fn is not None:
+        w = w.foreachBatch(batch_fn)
+    q = w.start(**{"outputMode": "update", **start})
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def stream_assign(
@@ -318,15 +346,7 @@ class StreamingKMeans:
     def run(self, points_stream: DataFrame) -> None:
         """Drive the stream to completion (synchronous local harness;
         production leaves the query running)."""
-        q = (
-            points_stream.writeStream.outputMode("update")
-            .foreachBatch(lambda df, bid: self.update(df, bid))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(points_stream, self.update)
 
 
 def run_to_parquet(
@@ -337,19 +357,14 @@ def run_to_parquet(
     end-to-end exactly-once for file sources → file sinks: re-running
     with the same checkpoint resumes from recorded offsets and never
     rewrites committed batches (the streaming analogue of the
-    reference's archive-by-rename, minus the rename races). Synchronous
-    local-harness form — production would leave the query running."""
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    reference's archive-by-rename, minus the rename races)."""
+    _drain(
+        stream_df,
+        outputMode="append",
+        format="parquet",
+        path=path,
+        checkpointLocation=checkpoint,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def run_to_memory(
@@ -357,16 +372,7 @@ def run_to_memory(
 ) -> None:
     """Drive a streaming DataFrame to completion against a memory sink
     (synchronous; local test harness)."""
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream_df, outputMode=output_mode, format="memory", queryName=name)
 
 
 class StreamingCMS:
@@ -418,15 +424,7 @@ class StreamingCMS:
 
     def run(self, docs_stream: DataFrame) -> None:
         """Drive the stream to completion (synchronous local harness)."""
-        q = (
-            docs_stream.writeStream.outputMode("update")
-            .foreachBatch(lambda df, bid: self.update(df, bid))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(docs_stream, self.update)
 
 
 def stream_land_partitions(
@@ -448,21 +446,13 @@ def stream_land_partitions(
     the same partition would keep only the later one). For streams that
     append within a partition, use the checkpointed append sink
     (:func:`run_to_parquet`), whose offset log provides the dedup
-    instead. Synchronous local-harness form, like the other runners.
+    instead.
     """
     from mapreducekmean_spark.sources import upsert_partitions
 
-    q = (
-        stream_df.writeStream.outputMode("update")
-        .foreachBatch(
-            lambda df, _bid: upsert_partitions(df, path, partition_cols)
-        )
-        .start()
+    _drain(
+        stream_df, lambda df, _bid: upsert_partitions(df, path, partition_cols)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def ingest_dedup_batch(
@@ -482,10 +472,8 @@ def ingest_dedup_batch(
     body of :func:`stream_ingest_dedup`, public so tests (and batch
     backfills) can drive the exact same code path batch by batch.
 
-    Per batch: (1) replay guard — a batch id at or below the recorded
-    high-water mark is a Structured Streaming REPLAY (restart after a
-    sink-side crash) and must be a no-op, the standard batch-id
-    idempotency contract of foreachBatch sinks; (2) index discovery
+    Per batch: (1) the replay guard (:func:`operators.cdc._guarded_batch`
+    owns the contract; marker ``_ingest_high_water``); (2) index discovery
     from the FILESYSTEM, not the session catalog — after a driver
     restart the (default, in-memory) catalog is empty while the landed
     files persist, and trusting the catalog would silently re-LAND over
@@ -514,9 +502,7 @@ def ingest_dedup_batch(
     coarse centroids AND codebooks frozen from the first batch) — so
     the landed corpus is searchable everywhere without manual index
     maintenance; all appends carry their own content-checked replay
-    guards, so the crash-between-step-and-marker window stays safe;
-    (6) the high-water mark advances last, so every step a replay
-    re-runs is individually idempotent."""
+    guards, so the crash-between-step-and-marker window stays safe."""
     from mapreducekmean_spark.operators.dedup import (
         VERIFY_THRESHOLD,
         gram_rows,
@@ -533,94 +519,93 @@ def ingest_dedup_batch(
 
     if threshold is None:
         threshold = VERIFY_THRESHOLD
-    marker = os.path.join(index_path, "_ingest_high_water")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if batch_id <= int(f.read().strip()):
-                return  # replay of a completed batch: no-op
-    batch_df = batch_df.localCheckpoint()  # one materialization per batch
-    if not batch_df.take(1):
-        return
-    has_index = os.path.exists(os.path.join(index_path, "sizes"))
-    if has_index:
-        attach_dedup_index(spark, name, index_path)  # no-op if registered
-        sh = gram_rows(batch_df).distinct().localCheckpoint()
-        verdict = dedup_delta(spark, batch_df, name, threshold, shingled=sh)
-    else:
-        sh = None
-        verdict = minhash_verified_dedup(batch_df, threshold)
-    # checkpoint: kept feeds SEVERAL actions below (output upsert, the
-    # BM25 totals/tf/probe, the IVF head + write), and the index
-    # upserts in between MUTATE the landed state the lazy verdict is
-    # derived from — the same hazard pipeline.py checkpoints against
-    # (dedup_delta's tail-state tolerance would mask it, but only by
-    # re-running the whole candidate join per action)
-    kept = batch_df.join(
-        verdict.filter("kept").select("doc_id"), "doc_id", "left_semi"
-    ).localCheckpoint()
-    upsert_partitions(
-        kept.withColumn("ingest_batch", F.lit(int(batch_id))),
-        out_path,
-        "ingest_batch",
-    )
-    if not has_index:
-        land_dedup_index(spark, batch_df, name, index_path)
-    elif not batch_already_indexed(spark, batch_df, name, shingled=sh):
-        append_to_index(spark, batch_df, name, shingled=sh)
-    if bm25_path is not None:
-        from mapreducekmean_spark.operators.search import (
-            append_bm25_index,
-            attach_bm25_index,
-            land_bm25_index,
-        )
 
-        bm25_name = f"{name}_bm25"
-        if os.path.exists(os.path.join(bm25_path, "tf")):
-            attach_bm25_index(spark, bm25_name, bm25_path)
-            append_bm25_index(spark, kept, bm25_name)
+    def apply(batch_df: DataFrame) -> None:
+        has_index = os.path.exists(os.path.join(index_path, "sizes"))
+        if has_index:
+            attach_dedup_index(spark, name, index_path)  # no-op if known
+            sh = gram_rows(batch_df).distinct().localCheckpoint()
+            verdict = dedup_delta(
+                spark, batch_df, name, threshold, shingled=sh
+            )
         else:
-            land_bm25_index(spark, kept, bm25_name, bm25_path)
-    if (
-        ivf_path is not None or ivfpq_path is not None
-    ) and "embedding" in batch_df.columns:
-        from mapreducekmean_spark.functions.vector import as_double_array
-
-        vecs = kept.select(
-            F.col("doc_id").alias("vec_id"),
-            as_double_array("embedding").alias("emb"),
+            sh = None
+            verdict = minhash_verified_dedup(batch_df, threshold)
+        # checkpoint: kept feeds SEVERAL actions below (output upsert, the
+        # BM25 totals/tf/probe, the IVF head + write), and the index
+        # upserts in between MUTATE the landed state the lazy verdict is
+        # derived from — the same hazard pipeline.py checkpoints against
+        # (dedup_delta's tail-state tolerance would mask it, but only by
+        # re-running the whole candidate join per action)
+        kept = batch_df.join(
+            verdict.filter("kept").select("doc_id"), "doc_id", "left_semi"
+        ).localCheckpoint()
+        upsert_partitions(
+            kept.withColumn("ingest_batch", F.lit(int(batch_id))),
+            out_path,
+            "ingest_batch",
         )
-        if ivf_path is not None:
-            from mapreducekmean_spark.operators.similarity import (
-                append_ivf_index,
-                land_ivf_index_points,
+        if not has_index:
+            land_dedup_index(spark, batch_df, name, index_path)
+        elif not batch_already_indexed(spark, batch_df, name, shingled=sh):
+            append_to_index(spark, batch_df, name, shingled=sh)
+        if bm25_path is not None:
+            from mapreducekmean_spark.operators.search import (
+                append_bm25_index,
+                attach_bm25_index,
+                land_bm25_index,
             )
 
-            if os.path.exists(os.path.join(ivf_path, "centroids")):
-                append_ivf_index(spark, vecs, ivf_path)
+            bm25_name = f"{name}_bm25"
+            if os.path.exists(os.path.join(bm25_path, "tf")):
+                attach_bm25_index(spark, bm25_name, bm25_path)
+                append_bm25_index(spark, kept, bm25_name)
             else:
-                land_ivf_index_points(
-                    spark, vecs, ivf_path, **(
-                        {"ncells": ivf_ncells} if ivf_ncells else {}
-                    )
-                )
-        if ivfpq_path is not None:
-            from mapreducekmean_spark.operators.pq import (
-                append_ivfpq_index,
-                land_ivfpq_index_points,
-            )
+                land_bm25_index(spark, kept, bm25_name, bm25_path)
+        if (
+            ivf_path is not None or ivfpq_path is not None
+        ) and "embedding" in batch_df.columns:
+            from mapreducekmean_spark.functions.vector import as_double_array
 
-            if os.path.exists(os.path.join(ivfpq_path, "centroids")):
-                append_ivfpq_index(spark, vecs, ivfpq_path)
-            else:
-                land_ivfpq_index_points(
-                    spark, vecs, ivfpq_path, **(
-                        {"ncells": ivf_ncells} if ivf_ncells else {}
-                    )
+            vecs = kept.select(
+                F.col("doc_id").alias("vec_id"),
+                as_double_array("embedding").alias("emb"),
+            )
+            if ivf_path is not None:
+                from mapreducekmean_spark.operators.similarity import (
+                    append_ivf_index,
+                    land_ivf_index_points,
                 )
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, marker)
+
+                if os.path.exists(os.path.join(ivf_path, "centroids")):
+                    append_ivf_index(spark, vecs, ivf_path)
+                else:
+                    land_ivf_index_points(
+                        spark, vecs, ivf_path, **(
+                            {"ncells": ivf_ncells} if ivf_ncells else {}
+                        )
+                    )
+            if ivfpq_path is not None:
+                from mapreducekmean_spark.operators.pq import (
+                    append_ivfpq_index,
+                    land_ivfpq_index_points,
+                )
+
+                if os.path.exists(os.path.join(ivfpq_path, "centroids")):
+                    append_ivfpq_index(spark, vecs, ivfpq_path)
+                else:
+                    land_ivfpq_index_points(
+                        spark, vecs, ivfpq_path, **(
+                            {"ncells": ivf_ncells} if ivf_ncells else {}
+                        )
+                    )
+
+    _guarded_batch(
+        batch_df,
+        batch_id,
+        os.path.join(index_path, "_ingest_high_water"),
+        apply,
+    )
 
 
 def stream_ingest_dedup(
@@ -643,33 +628,16 @@ def stream_ingest_dedup(
     are append-only monotone across batches — each batch's ids exceed
     everything landed. The delta guard refuses otherwise, which also
     catches accidental re-delivery that the batch-id replay guard
-    didn't (a re-sent batch under a NEW batch id).
-
-    Synchronous local-harness form like the other runners."""
+    didn't (a re-sent batch under a NEW batch id)."""
     spark = docs_stream.sparkSession
-    q = (
-        docs_stream.writeStream.outputMode("update")
-        # The checkpoint makes batch ids DURABLE across driver restarts.
-        # ingest_dedup_batch's _ingest_high_water marker persists with
-        # the index, so without a checkpoint a restarted stream would
-        # restart batch ids at 0, see id <= high-water, and silently
-        # no-op every batch of NEW documents (ADVICE r6 high). With it,
-        # a restart resumes from the logged offset and replays at most
-        # the one in-flight batch — which the marker correctly no-ops.
-        .option("checkpointLocation", os.path.join(index_path, "_checkpoint"))
-        .foreachBatch(
-            lambda df, bid: ingest_dedup_batch(
-                spark, df, bid, name, index_path, out_path,
-                bm25_path=bm25_path, ivf_path=ivf_path,
-                ivfpq_path=ivfpq_path,
-            )
-        )
-        .start()
+    _drain(
+        docs_stream,
+        lambda df, bid: ingest_dedup_batch(
+            spark, df, bid, name, index_path, out_path,
+            bm25_path=bm25_path, ivf_path=ivf_path, ivfpq_path=ivfpq_path,
+        ),
+        store=index_path,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def chunk_ingest_batch(
@@ -692,13 +660,14 @@ def chunk_ingest_batch(
     the first occurrence lands append-only while the landed hash
     table grows.
 
-    Per batch: (1) batch-id replay guard (high-water marker, advances
-    LAST); (2) chunk; (3) within-batch first occurrence per hash —
-    min (doc_id, chunk_id); (4) cross-batch: anti-join against the
-    landed hash table, counting only rows landed by EARLIER batches
-    (``doc_id < batch_min`` — a crashed prior attempt of THIS batch
-    landed hashes with ``doc_id >= batch_min``, and trusting those
-    would drop the whole rerun as duplicates of itself; NULL
+    Per batch: (1) the replay guard (:func:`operators.cdc._guarded_batch`,
+    marker ``_chunk_ingest_high_water``); (2) chunk; (3) within-batch
+    first occurrence per hash — min (doc_id, chunk_id); (4) cross-batch:
+    anti-join against the landed hash table, counting only rows landed
+    by EARLIER batches (``doc_id < batch_min`` — a crashed prior
+    attempt of THIS batch landed hashes with ``doc_id >= batch_min``,
+    and trusting those would drop the whole rerun as duplicates of
+    itself; NULL
     provenance counts as landed-earlier — the
     ``prepare_training_data_incremental`` discipline verbatim);
     (5) kept chunks land as the ``ingest_batch=<id>`` partition via
@@ -729,89 +698,87 @@ def chunk_ingest_batch(
         size = CHUNK_SIZE
     if stride is None:
         stride = CHUNK_STRIDE
-    marker = os.path.join(index_path, "_chunk_ingest_high_water")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if batch_id <= int(f.read().strip()):
-                return  # replay of a completed batch: no-op
-    batch_df = batch_df.localCheckpoint()
-    if not batch_df.take(1):
-        return
-    batch_min = batch_df.agg(F.min("doc_id")).collect()[0][0]
-    chunks = chunk_documents(
-        batch_df.select("doc_id", "text"), size=size, stride=stride
-    ).localCheckpoint()
-    # within-batch first occurrence per hash: min (doc_id, chunk_id)
-    first = chunks.groupBy("chunk_hash").agg(
-        F.min(F.struct("doc_id", "chunk_id")).alias("w")
-    )
-    batch_first = chunks.join(
-        first.select(
-            "chunk_hash",
-            F.col("w.doc_id").alias("doc_id"),
-            F.col("w.chunk_id").alias("chunk_id"),
-        ),
-        ["chunk_hash", "doc_id", "chunk_id"],
-    ).localCheckpoint()
 
-    hashes_dir = os.path.join(index_path, "hashes")
-    have_hashes = os.path.exists(hashes_dir)
-    if have_hashes:
-        if not spark.catalog.tableExists(f"{name}_chunk_hashes"):
-            spark.sql(
-                f"CREATE TABLE {name}_chunk_hashes "
-                f"(chunk_hash STRING, doc_id BIGINT) "
-                f"USING parquet CLUSTERED BY (chunk_hash) "
-                f"SORTED BY (chunk_hash) INTO {INDEX_BUCKETS} "
-                f"BUCKETS LOCATION '{hashes_dir}'"
-            )
-        landed = read_bucketed(spark, f"{name}_chunk_hashes").filter(
-            F.col("doc_id").isNull() | (F.col("doc_id") < batch_min)
-        )
-        kept = batch_first.join(
-            landed.select("chunk_hash"), "chunk_hash", "left_anti"
+    def apply(batch_df: DataFrame) -> None:
+        batch_min = batch_df.agg(F.min("doc_id")).collect()[0][0]
+        chunks = chunk_documents(
+            batch_df.select("doc_id", "text"), size=size, stride=stride
         ).localCheckpoint()
-    else:
-        kept = batch_first
-    upsert_partitions(
-        kept.withColumn("ingest_batch", F.lit(int(batch_id))),
-        out_path,
-        "ingest_batch",
-    )
-    # grow the hash table with the KEPT hashes only — the within-batch
-    # firsts not already landed by a prior batch. Appending all of
-    # batch_first would re-append every cross-batch loser's hash each
-    # batch, growing the table one duplicate row per repeated chunk
-    # per batch forever (r11 advice — set-semantic consumers stayed
-    # correct, but the table's scan cost didn't). The replay probe
-    # below keys on the SAME frame being appended, so a
-    # crash-after-append replay (kept recomputes identically: the
-    # landed anti-join filter excludes this batch's own rows) is still
-    # detected on its max-id row.
-    new_hashes = kept.select("chunk_hash", "doc_id")
-    probe = (
-        new_hashes.orderBy(F.col("doc_id").desc(), F.col("chunk_hash").asc())
-        .take(1)
-    )
-    already = bool(probe) and have_hashes and bool(
-        spark.table(f"{name}_chunk_hashes")
-        .filter(
-            (F.col("chunk_hash") == probe[0]["chunk_hash"])
-            & (F.col("doc_id") == probe[0]["doc_id"])
+        # within-batch first occurrence per hash: min (doc_id, chunk_id)
+        first = chunks.groupBy("chunk_hash").agg(
+            F.min(F.struct("doc_id", "chunk_id")).alias("w")
         )
-        .take(1)
-    )
-    if not already:
-        write_bucketed(
-            new_hashes,
-            f"{name}_chunk_hashes",
-            "chunk_hash",
-            INDEX_BUCKETS,
-            hashes_dir,
-            mode="append" if have_hashes else "overwrite",
+        batch_first = chunks.join(
+            first.select(
+                "chunk_hash",
+                F.col("w.doc_id").alias("doc_id"),
+                F.col("w.chunk_id").alias("chunk_id"),
+            ),
+            ["chunk_hash", "doc_id", "chunk_id"],
+        ).localCheckpoint()
+
+        hashes_dir = os.path.join(index_path, "hashes")
+        have_hashes = os.path.exists(hashes_dir)
+        if have_hashes:
+            if not spark.catalog.tableExists(f"{name}_chunk_hashes"):
+                spark.sql(
+                    f"CREATE TABLE {name}_chunk_hashes "
+                    f"(chunk_hash STRING, doc_id BIGINT) "
+                    f"USING parquet CLUSTERED BY (chunk_hash) "
+                    f"SORTED BY (chunk_hash) INTO {INDEX_BUCKETS} "
+                    f"BUCKETS LOCATION '{hashes_dir}'"
+                )
+            landed = read_bucketed(spark, f"{name}_chunk_hashes").filter(
+                F.col("doc_id").isNull() | (F.col("doc_id") < batch_min)
+            )
+            kept = batch_first.join(
+                landed.select("chunk_hash"), "chunk_hash", "left_anti"
+            ).localCheckpoint()
+        else:
+            kept = batch_first
+        upsert_partitions(
+            kept.withColumn("ingest_batch", F.lit(int(batch_id))),
+            out_path,
+            "ingest_batch",
         )
-    with open(marker, "w") as f:
-        f.write(str(batch_id))
+        # grow the hash table with the KEPT hashes only — the within-batch
+        # firsts not already landed by a prior batch. Appending all of
+        # batch_first would re-append every cross-batch loser's hash each
+        # batch, growing the table one duplicate row per repeated chunk
+        # per batch forever (r11 advice — set-semantic consumers stayed
+        # correct, but the table's scan cost didn't). The replay probe
+        # below keys on the SAME frame being appended, so a
+        # crash-after-append replay (kept recomputes identically: the
+        # landed anti-join filter excludes this batch's own rows) is still
+        # detected on its max-id row.
+        new_hashes = kept.select("chunk_hash", "doc_id")
+        probe = new_hashes.orderBy(
+            F.col("doc_id").desc(), F.col("chunk_hash").asc()
+        ).take(1)
+        already = bool(probe) and have_hashes and bool(
+            spark.table(f"{name}_chunk_hashes")
+            .filter(
+                (F.col("chunk_hash") == probe[0]["chunk_hash"])
+                & (F.col("doc_id") == probe[0]["doc_id"])
+            )
+            .take(1)
+        )
+        if not already:
+            write_bucketed(
+                new_hashes,
+                f"{name}_chunk_hashes",
+                "chunk_hash",
+                INDEX_BUCKETS,
+                hashes_dir,
+                mode="append" if have_hashes else "overwrite",
+            )
+
+    _guarded_batch(
+        batch_df,
+        batch_id,
+        os.path.join(index_path, "_chunk_ingest_high_water"),
+        apply,
+    )
 
 
 def stream_chunk_ingest(
@@ -825,27 +792,15 @@ def stream_chunk_ingest(
     grows with every batch. ``foreachBatch`` →
     :func:`chunk_ingest_batch`; semantics, replay behavior, and the
     batch-prefix ≡ one-shot equivalence are documented there and
-    pinned in tests/test_streaming_ingest.py. Synchronous
-    local-harness form like the other runners; the durable checkpoint
-    keeps batch ids monotone across driver restarts (the
-    ``stream_ingest_dedup`` rationale)."""
+    pinned in tests/test_streaming_ingest.py."""
     spark = docs_stream.sparkSession
-    q = (
-        docs_stream.writeStream.outputMode("update")
-        .option(
-            "checkpointLocation", os.path.join(index_path, "_checkpoint")
-        )
-        .foreachBatch(
-            lambda df, bid: chunk_ingest_batch(
-                spark, df, bid, name, index_path, out_path
-            )
-        )
-        .start()
+    _drain(
+        docs_stream,
+        lambda df, bid: chunk_ingest_batch(
+            spark, df, bid, name, index_path, out_path
+        ),
+        store=index_path,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def stream_cdc_merge(
@@ -858,33 +813,19 @@ def stream_cdc_merge(
     maintains a ``kb=``-partitioned parquet snapshot, rewriting only the
     key buckets each micro-batch touches — the plain-parquet form of a
     streaming MERGE INTO. ``foreachBatch`` →
-    :func:`operators.cdc.cdc_merge_stream_batch`; the batch-id
-    high-water marker plus the durable checkpoint give the standard
-    restart/replay idempotency (same contract as
-    :func:`stream_ingest_dedup`, documented there). Batches apply
-    sequentially, so later batches win without seq namespacing.
-
-    Synchronous local-harness form like the other runners."""
+    :func:`operators.cdc.cdc_merge_stream_batch`, whose replay guard
+    is :func:`operators.cdc._guarded_batch`. Batches apply
+    sequentially, so later batches win without seq namespacing."""
     from mapreducekmean_spark.operators.cdc import cdc_merge_stream_batch
 
     spark = changes_stream.sparkSession
-    q = (
-        changes_stream.writeStream.outputMode("update")
-        .option(
-            "checkpointLocation",
-            os.path.join(snapshot_path, "_checkpoint"),
-        )
-        .foreachBatch(
-            lambda df, bid: cdc_merge_stream_batch(
-                spark, df, bid, snapshot_path, seq=seq, op=op
-            )
-        )
-        .start()
+    _drain(
+        changes_stream,
+        lambda df, bid: cdc_merge_stream_batch(
+            spark, df, bid, snapshot_path, seq=seq, op=op
+        ),
+        store=snapshot_path,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 _SCD2_OUT_SCHEMA = (
@@ -982,8 +923,8 @@ def semantic_dedup_batch(
     twin of :func:`ingest_dedup_batch`, built from the same replayable
     parts:
 
-    (1) batch-id high-water guard (atomic temp + ``os.replace``; a
-    replayed completed batch no-ops); (2) index discovery from the
+    (1) the replay guard (:func:`operators.cdc._guarded_batch`, marker
+    ``_semdedup_high_water``); (2) index discovery from the
     FILESYSTEM — the first batch LANDS the IVF index from itself
     (quantizer frozen forever after, the vector-store contract), later
     batches leave it to step (4); (3) verdicts via
@@ -996,8 +937,7 @@ def semantic_dedup_batch(
     since a dropped vector still canonicalizes later duplicates;
     (5) verdicts land as the ``sem_batch=<id>`` partition via
     partition UPSERT (a replay REPLACES its own partition,
-    row-identical); (6) the marker advances LAST, so every step a
-    replay re-runs is individually idempotent.
+    row-identical).
 
     Batch-prefix equivalence (pinned in tests/test_streaming_ingest.py):
     after any prefix of batches, the landed verdicts equal the one-shot
@@ -1012,34 +952,26 @@ def semantic_dedup_batch(
     )
     from mapreducekmean_spark.sources.bucketing import upsert_partitions
 
-    marker = os.path.join(index_path, "_semdedup_high_water")
-    if os.path.exists(marker):
-        try:
-            with open(marker) as f:
-                mark = int(f.read().strip())
-        except ValueError:
-            mark = -1  # torn marker reads as absent (re-run is idempotent)
-        if batch_id <= mark:
-            return
-    batch_df = batch_df.select("vec_id", "emb").localCheckpoint()
-    if not batch_df.take(1):
-        return
-    if not os.path.exists(os.path.join(index_path, "centroids")):
-        land_ivf_index_points(
-            spark, batch_df, index_path,
-            **({"ncells": ncells} if ncells else {}),
+    def apply(batch_df: DataFrame) -> None:
+        if not os.path.exists(os.path.join(index_path, "centroids")):
+            land_ivf_index_points(
+                spark, batch_df, index_path,
+                **({"ncells": ncells} if ncells else {}),
+            )
+        verdicts = semantic_dedup_delta(spark, batch_df, index_path)
+        upsert_partitions(
+            verdicts.withColumn("sem_batch", F.lit(int(batch_id))),
+            out_path,
+            "sem_batch",
         )
-    verdicts = semantic_dedup_delta(spark, batch_df, index_path)
-    upsert_partitions(
-        verdicts.withColumn("sem_batch", F.lit(int(batch_id))),
-        out_path,
-        "sem_batch",
+        append_ivf_index(spark, batch_df, index_path)
+
+    _guarded_batch(
+        batch_df.select("vec_id", "emb"),
+        batch_id,
+        os.path.join(index_path, "_semdedup_high_water"),
+        apply,
     )
-    append_ivf_index(spark, batch_df, index_path)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(int(batch_id)))
-    os.replace(tmp, marker)
 
 
 def stream_semantic_dedup(
@@ -1053,26 +985,15 @@ def stream_semantic_dedup(
     against the LANDED IVF index's touched cells only, verdicts land
     append-only, and the index grows with every batch. ``foreachBatch``
     → :func:`semantic_dedup_batch`; semantics, replay behavior, and the
-    batch-prefix ≡ one-shot equivalence are documented there. The
-    checkpoint makes batch ids durable across driver restarts (the
-    ``stream_ingest_dedup`` rationale, documented there).
-
-    Synchronous local-harness form like the other runners."""
+    batch-prefix ≡ one-shot equivalence are documented there."""
     spark = vec_stream.sparkSession
-    q = (
-        vec_stream.writeStream.outputMode("update")
-        .option("checkpointLocation", os.path.join(index_path, "_checkpoint"))
-        .foreachBatch(
-            lambda df, bid: semantic_dedup_batch(
-                spark, df, bid, index_path, out_path, ncells=ncells
-            )
-        )
-        .start()
+    _drain(
+        vec_stream,
+        lambda df, bid: semantic_dedup_batch(
+            spark, df, bid, index_path, out_path, ncells=ncells
+        ),
+        store=index_path,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def stream_agg_maintenance(
@@ -1083,27 +1004,18 @@ def stream_agg_maintenance(
     folds into the landed per-key aggregate, rewriting only the key
     buckets it touches — the materialized-view twin of
     :func:`stream_cdc_merge`. ``foreachBatch`` →
-    :func:`operators.cdc.agg_stream_batch`; the batch-id marker plus
-    the per-key ``last_bid`` watermark (which covers even a partial
-    bucket-swap crash) are documented there. Synchronous local-harness
-    form like the other runners."""
+    :func:`operators.cdc.agg_stream_batch`, whose per-key ``last_bid``
+    watermark covers even a partial bucket-swap crash. The four
+    ``stream_*_maintenance`` runners below are this runner over a
+    row-wise projection of their input stream."""
     from mapreducekmean_spark.operators.cdc import agg_stream_batch
 
     spark = rows_stream.sparkSession
-    q = (
-        rows_stream.writeStream.outputMode("update")
-        .option(
-            "checkpointLocation", os.path.join(agg_path, "_checkpoint")
-        )
-        .foreachBatch(
-            lambda df, bid: agg_stream_batch(spark, df, bid, agg_path)
-        )
-        .start()
+    _drain(
+        rows_stream,
+        lambda df, bid: agg_stream_batch(spark, df, bid, agg_path),
+        store=agg_path,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 class StreamingBottomK:
@@ -1117,7 +1029,11 @@ class StreamingBottomK:
     row survived its own batch's bottom-k), the running state after any
     prefix of batches is IDENTICAL to sketching that prefix at once —
     pinned in tests/test_streaming.py. ``quantiles`` answers driver-side
-    with the same type-1 positional pick the batch estimator uses."""
+    with the same type-1 positional pick the batch estimator uses.
+
+    There is no batch-id guard: the skey-keyed merge already makes a
+    redelivered batch a no-op, and ``run`` keeps no checkpoint, so
+    batch ids restart at 0 on every run."""
 
     def __init__(self, k: int | None = None, seed: int | None = None):
         from mapreducekmean_spark.operators.sketch import QSK_K, QSK_SEED
@@ -1126,19 +1042,10 @@ class StreamingBottomK:
         self.seed = QSK_SEED if seed is None else seed
         #: per type: list of (skey, cents), kept sorted, ≤ k entries
         self.samples: dict[str, list[tuple[str, int]]] = {}
-        #: replay guard: highest batch_id merged so far (same high-water
-        #: discipline as the other foreachBatch bodies in this module) —
-        #: a redelivered micro-batch is a no-op instead of re-inserting
-        #: its rows.
-        self._last_bid: int = -1
 
     def update(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
         from mapreducekmean_spark.operators.sketch import bottomk_sample
 
-        if batch_id is not None:
-            if batch_id <= self._last_bid:
-                return  # replayed micro-batch: already merged
-            self._last_bid = batch_id
         rows = bottomk_sample(batch_df, self.k, self.seed).collect()
         by_type: dict[str, list[tuple[str, int]]] = {}
         for r in rows:  # bounded: ≤ types × k rows
@@ -1170,15 +1077,7 @@ class StreamingBottomK:
 
     def run(self, events_stream: DataFrame) -> None:
         """Drive the stream to completion (synchronous local harness)."""
-        q = (
-            events_stream.writeStream.outputMode("update")
-            .foreachBatch(lambda df, bid: self.update(df, bid))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(events_stream, self.update)
 
 
 def stream_host_stats_maintenance(
@@ -1190,33 +1089,14 @@ def stream_host_stats_maintenance(
     raw documents projects to the keyed (source, content_hash) level
     inputs (ONE fused tokenize/quality/hash projection,
     ``text._host_key_rows``) and folds into the landed aggregate
-    snapshot via :func:`operators.cdc.agg_stream_batch` — touched-
-    bucket copy-on-write, batch-id marker, per-key ``last_bid``
-    watermark (partial-crash replay converges; documented there). The
-    report (:func:`operators.text.host_stats_from_snapshot`) stays
+    snapshot via :func:`stream_agg_maintenance` — touched-bucket
+    copy-on-write, partial-crash replay converges. The report
+    (:func:`operators.text.host_stats_from_snapshot`) stays
     level-table arithmetic at any moment of the stream, exact after
-    every batch prefix (pinned in tests/test_cdc.py). Synchronous
-    local-harness form like the other runners."""
-    from mapreducekmean_spark.operators.cdc import agg_stream_batch
+    every batch prefix (pinned in tests/test_cdc.py)."""
     from mapreducekmean_spark.operators.text import _host_key_rows
 
-    spark = docs_stream.sparkSession
-    q = (
-        docs_stream.writeStream.outputMode("update")
-        .option(
-            "checkpointLocation", os.path.join(snap_path, "_checkpoint")
-        )
-        .foreachBatch(
-            lambda df, bid: agg_stream_batch(
-                spark, _host_key_rows(df), bid, snap_path
-            )
-        )
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    stream_agg_maintenance(_host_key_rows(docs_stream), snap_path)
 
 
 def stream_quality_deciles_maintenance(
@@ -1229,33 +1109,13 @@ def stream_quality_deciles_maintenance(
     raw documents projects to the scaled-bigint quality level inputs
     (ONE fused projection, ``text._quality_level_rows``) and folds
     into the landed aggregate snapshot via
-    :func:`operators.cdc.agg_stream_batch` — touched-bucket
-    copy-on-write, batch-id marker, per-key ``last_bid`` watermark
-    (partial-crash replay converges). The decile report
+    :func:`stream_agg_maintenance`. The decile report
     (:func:`operators.text.quality_deciles_from_snapshot`) stays
     level-table arithmetic at any moment of the stream, exact after
-    every batch prefix. Synchronous local-harness form like the other
-    runners."""
-    from mapreducekmean_spark.operators.cdc import agg_stream_batch
+    every batch prefix."""
     from mapreducekmean_spark.operators.text import _quality_level_rows
 
-    spark = docs_stream.sparkSession
-    q = (
-        docs_stream.writeStream.outputMode("update")
-        .option(
-            "checkpointLocation", os.path.join(snap_path, "_checkpoint")
-        )
-        .foreachBatch(
-            lambda df, bid: agg_stream_batch(
-                spark, _quality_level_rows(df), bid, snap_path
-            )
-        )
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    stream_agg_maintenance(_quality_level_rows(docs_stream), snap_path)
 
 
 def stream_seq_len_histogram_maintenance(
@@ -1263,56 +1123,22 @@ def stream_seq_len_histogram_maintenance(
     snap_path: str,
 ) -> None:
     """Streamed maintenance of the (source, bucket) length-histogram
-    snapshot — same agg_stream_batch discipline over
+    snapshot — :func:`stream_agg_maintenance` over
     ``text._seqlen_key_rows``; the report off the snapshot stays
     exact after every batch prefix."""
-    from mapreducekmean_spark.operators.cdc import agg_stream_batch
     from mapreducekmean_spark.operators.text import _seqlen_key_rows
 
-    spark = docs_stream.sparkSession
-    q = (
-        docs_stream.writeStream.outputMode("update")
-        .option(
-            "checkpointLocation", os.path.join(snap_path, "_checkpoint")
-        )
-        .foreachBatch(
-            lambda df, bid: agg_stream_batch(
-                spark, _seqlen_key_rows(df), bid, snap_path
-            )
-        )
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    stream_agg_maintenance(_seqlen_key_rows(docs_stream), snap_path)
 
 
 def stream_embedding_stats_maintenance(
     embs_stream: DataFrame,
     snap_path: str,
 ) -> None:
-    """Streamed maintenance of the per-dimension drift snapshot — the
-    agg_stream_batch discipline over ``text._embedding_cell_rows``
+    """Streamed maintenance of the per-dimension drift snapshot —
+    :func:`stream_agg_maintenance` over ``text._embedding_cell_rows``
     (sums add under the watermark, min/max fold by least/greatest);
     the d-row report stays exact after every batch prefix."""
-    from mapreducekmean_spark.operators.cdc import agg_stream_batch
     from mapreducekmean_spark.operators.text import _embedding_cell_rows
 
-    spark = embs_stream.sparkSession
-    q = (
-        embs_stream.writeStream.outputMode("update")
-        .option(
-            "checkpointLocation", os.path.join(snap_path, "_checkpoint")
-        )
-        .foreachBatch(
-            lambda df, bid: agg_stream_batch(
-                spark, _embedding_cell_rows(df), bid, snap_path
-            )
-        )
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    stream_agg_maintenance(_embedding_cell_rows(embs_stream), snap_path)

@@ -1366,9 +1366,11 @@ def probe_semdelta(spark, results: dict, n_vecs: int = 500_000) -> None:
 
 def probe_rebalance(spark, results: dict, n_vecs: int = 500_000) -> None:
     """rebalance_ivf_cells on a GENUINELY skewed landed index: the
-    isotropic sin corpus under a deterministic-init quantizer measured
-    one Voronoi cell holding ~21% of 500k vectors (the semdelta probe's
-    original failure). Land that exact shape, rebalance with a 50k-row
+    isotropic sin corpus of ``n_vecs`` vectors (``--vecs``) under a
+    deterministic-init quantizer with the default ``km.DEFAULT_K``
+    cells, where one Voronoi cell held ~21% of 500k vectors (the
+    semdelta probe's original failure). Land that exact shape, report
+    the landed cell count, rebalance with a 50k-row
     bound, and verify at volume: every row preserved, every cell within
     bound, one tombstone per retired original cell, and the cost
     tracked the hot cells' rows (reported), not the index. A sub-cell
@@ -1385,7 +1387,6 @@ def probe_rebalance(spark, results: dict, n_vecs: int = 500_000) -> None:
         rebalance_ivf_cells,
     )
 
-    ncells = 256
     sfdir = f"{BASE}/ivf_sfdir_{n_vecs}"
     if not os.path.exists(f"{sfdir}/embeddings.parquet"):
         (
@@ -1404,6 +1405,7 @@ def probe_rebalance(spark, results: dict, n_vecs: int = 500_000) -> None:
     pts = km.embeddings(spark, sfdir).select("vec_id", "emb")
     idx = probe_tmpdir(prefix="mrkm_rebal_")
     land_ivf_index_points(spark, pts, idx)  # deterministic init: skewed
+    ncells = len(load_index_centroids(spark, idx))
     bound = 50_000
     before = (
         spark.read.parquet(f"{idx}/cells").groupBy("cell")

@@ -3,6 +3,9 @@ invariants, and the no-base-shuffle plan property."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from mapreducekmean_spark.operators import cdc
@@ -274,30 +277,116 @@ def test_cdc_stream_batch_replay_is_noop(spark, tmp_path):
     assert snap2 == snap1
 
 
-def test_cdc_stream_batch_tolerates_torn_marker(spark, tmp_path):
-    """A torn/empty high-water marker (crash mid-write in an old
-    version; the write is atomic now) must read as ABSENT — the batch
-    re-applies idempotently instead of every micro-batch raising."""
-    import os
-
-    from mapreducekmean_spark.operators import cdc
-
+def _torn_cdc_merge(spark, tmp_path, sf_small):
     path = str(tmp_path / "snap")
     base = spark.createDataFrame([(1, 10), (2, 20)], "k bigint, v bigint")
     cdc.land_snapshot(base, path, key="k", n_buckets=4)
-    marker = os.path.join(path, "_cdc_high_water")
-    with open(marker, "w") as f:
-        f.write("")  # torn write: empty marker
     b = spark.createDataFrame(
         [(1, 1, "U", 11)], "k bigint, seq int, op string, v bigint"
     )
-    cdc.cdc_merge_stream_batch(spark, b, 0, path)
-    got = {
-        (r.k, r.v) for r in spark.read.parquet(path).select("k", "v").collect()
-    }
-    assert got == {(1, 11), (2, 20)}
+
+    def applied():
+        got = spark.read.parquet(path).select("k", "v").collect()
+        return {(r.k, r.v) for r in got} == {(1, 11), (2, 20)}
+
+    return (
+        lambda df, bid: cdc.cdc_merge_stream_batch(spark, df, bid, path),
+        b,
+        os.path.join(path, "_cdc_high_water"),
+        applied,
+    )
+
+
+def _torn_agg(spark, tmp_path, sf_small):
+    path = str(tmp_path / "agg")
+    base = spark.createDataFrame([(1, 5), (2, 7)], "k bigint, c bigint")
+    cdc.land_agg_snapshot(base, path, key="k", sums=["c"], n_buckets=4)
+    b = spark.createDataFrame([(1, 3), (3, 4)], "k bigint, c bigint")
+
+    def applied():
+        got = cdc.read_agg_snapshot(spark, path).collect()
+        return {(r.k, r.n, r.c) for r in got} == {
+            (1, 2, 8), (2, 1, 7), (3, 1, 4)
+        }
+
+    return (
+        lambda df, bid: cdc.agg_stream_batch(spark, df, bid, path),
+        b,
+        os.path.join(path, "_agg_high_water"),
+        applied,
+    )
+
+
+def _torn_docs_ingest(body: str, marker: str):
+    """Torn-marker case for a document ingest body of streaming.jobs."""
+
+    def setup(spark, tmp_path, sf_small):
+        from mapreducekmean_spark.operators.text import documents
+        from mapreducekmean_spark.streaming import jobs
+
+        idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+        return (
+            lambda df, bid: getattr(jobs, body)(
+                spark, df, bid, f"t_torn_{body}", idx, out
+            ),
+            documents(spark, sf_small).orderBy("doc_id").limit(30),
+            os.path.join(idx, marker),
+            lambda: spark.read.parquet(out).count() > 0,
+        )
+
+    return setup
+
+
+def _torn_semantic_dedup(spark, tmp_path, sf_small):
+    from mapreducekmean_spark.operators import kmeans as km
+    from mapreducekmean_spark.streaming.jobs import semantic_dedup_batch
+
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    pts = km.embeddings(spark, sf_small).select("vec_id", "emb")
+    return (
+        lambda df, bid: semantic_dedup_batch(
+            spark, df, bid, idx, out, ncells=2
+        ),
+        pts.orderBy("vec_id").limit(40),
+        os.path.join(idx, "_semdedup_high_water"),
+        lambda: spark.read.parquet(out).count() == 40,
+    )
+
+
+_TORN_MARKER_BODIES = {
+    "cdc_merge": _torn_cdc_merge,
+    "agg": _torn_agg,
+    "ingest_dedup": _torn_docs_ingest(
+        "ingest_dedup_batch", "_ingest_high_water"
+    ),
+    "chunk_ingest": _torn_docs_ingest(
+        "chunk_ingest_batch", "_chunk_ingest_high_water"
+    ),
+    "semantic_dedup": _torn_semantic_dedup,
+}
+
+
+@pytest.mark.parametrize("body", list(_TORN_MARKER_BODIES))
+def test_stream_batch_tolerates_torn_marker(spark, sf_small, tmp_path, body):
+    """Every foreachBatch body that keeps a batch-id marker: a torn/empty
+    marker (crash mid-write in an old version; the write is atomic now)
+    must read as ABSENT — the batch applies instead of every
+    micro-batch raising — and the marker recovers to the batch id. An
+    empty batch advances the marker to its id too."""
+    run, batch, marker, applied = _TORN_MARKER_BODIES[body](
+        spark, tmp_path, sf_small
+    )
+    os.makedirs(os.path.dirname(marker), exist_ok=True)
+    with open(marker, "w") as f:
+        f.write("")  # torn write: empty marker
+    run(batch, 0)
+    assert applied()
     with open(marker) as f:
         assert f.read() == "0"  # marker recovered atomically
+    run(batch.limit(0), 1)
+    assert applied()
+    with open(marker) as f:
+        assert f.read() == "1"
 
 
 def test_stream_cdc_merge_end_to_end(spark, tmp_path):

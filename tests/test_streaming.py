@@ -1308,11 +1308,12 @@ def test_streaming_bottomk_matches_batch_sketch(spark, sf_small):
 
 
 def test_streaming_bottomk_replay_and_overlap_are_noops(spark, sf_small):
-    """The running sketch's two redelivery guards: (1) an update with a
-    batch_id at or below the high-water mark is skipped outright; (2) an
-    overlapping batch (no batch_id — same events seen twice) merges by
-    skey, so a duplicate occupies ONE sample slot and the state still
-    equals the whole-corpus sketch."""
+    """Redelivery needs no batch-id guard: the merge is keyed by skey
+    and keeps the k smallest keys, so (1) an exact redelivery of a
+    batch changes nothing, (2) an overlapping batch (same events seen
+    twice) puts each duplicate in ONE sample slot and the state still
+    equals the whole-corpus sketch, and (3) an empty batch is a
+    no-op."""
     from pyspark.sql import functions as F
 
     from mapreducekmean_spark.operators.events import events
@@ -1336,9 +1337,37 @@ def test_streaming_bottomk_replay_and_overlap_are_noops(spark, sf_small):
     sk = StreamingBottomK()
     even = ev.filter(F.col("event_id") % 2 == 0)
     sk.update(even, batch_id=0)
-    sk.update(even, batch_id=0)  # exact redelivery: skipped
+    sk.update(even, batch_id=0)  # exact redelivery: no change
     sk.update(ev, batch_id=1)  # overlap: even rows seen again
     assert {t: sorted(v) for t, v in sk.samples.items()} == whole
     state = {t: list(v) for t, v in sk.samples.items()}
-    sk.update(ev.limit(0), batch_id=1)  # stale id: no-op even if empty
+    sk.update(ev.limit(0), batch_id=1)  # empty batch: no-op
     assert sk.samples == state
+
+
+def test_streaming_bottomk_second_run_merges(spark, sf_small):
+    """``run`` keeps no checkpoint, so every run restarts batch ids at 0.
+    A second run on the same sketch must still merge its batches: the
+    events stream filtered to even event_id, then a second run filtered
+    to odd, reproduces the whole-corpus sketch."""
+    from pyspark.sql import functions as F
+
+    from mapreducekmean_spark.operators.events import events
+    from mapreducekmean_spark.operators.sketch import bottomk_sample
+    from mapreducekmean_spark.streaming.jobs import (
+        StreamingBottomK,
+        read_events_stream,
+    )
+
+    ev = events(spark, sf_small)
+    whole = {}
+    for r in bottomk_sample(ev).collect():
+        whole.setdefault(r.event_type, []).append((r.skey, r.cents))
+
+    sk = StreamingBottomK()
+    stream = read_events_stream(spark, sf_small)
+    sk.run(stream.filter(F.col("event_id") % 2 == 0))
+    sk.run(stream.filter(F.col("event_id") % 2 == 1))
+    assert {t: sorted(v) for t, v in sk.samples.items()} == {
+        t: sorted(v) for t, v in whole.items()
+    }
