@@ -30,9 +30,14 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from mapreducekmean_spark.operators.dedup import (
+    LSH_MAX_BUCKET,
+    _banded_self_join,
+)
 
 #: The multimodal asset schema: opaque payload + typed metadata.
 ASSET_SCHEMA = T.StructType(
@@ -1668,54 +1673,19 @@ def image_dhash(assets: DataFrame) -> DataFrame:
     )
 
 
-#: Band buckets larger than this degrade from the candidate clique to
-#: a star on the bucket's minimum id — the LSH_MAX_BUCKET discipline
-#: (operators/dedup.py) applied to the dHash matchers: a duplicate
-#: flood (thousands of byte-identical images/clips, or a degenerate
-#: low-entropy corpus) otherwise makes the (band, value) self-join
-#: quadratic in the hot bucket. Star edges are lossless for the mass
-#: that causes them (identical hashes verify at Hamming 0 against the
-#: center, and cluster through it); only non-center edges of an
-#: OVERSIZED bucket are dropped — pinned in tests/test_edge_cases.py.
-DHASH_MAX_BUCKET = 1024
-
-
-def dhash_near_dup_pairs(
-    hashes: DataFrame,
-    max_hamming: int = DHASH_MAX_HAMMING,
-    max_bucket_rows: int = DHASH_MAX_BUCKET,
+def _hamming_pairs(
+    h: DataFrame, ids: dict[str, str], max_hamming: int, max_bucket_rows: int
 ) -> DataFrame:
-    """Banded near-dup pair generation over dHash halves — the image
-    twin of MinHash LSH, riding the same economics: each hash explodes
-    into 4 × 16-bit bands (integer div/mod), candidates are the pairs
-    sharing a band VALUE (an equality join on (band, value) — never
-    all-pairs), and candidates verify by exact Hamming distance
-    (``bit_count(a ^ b)``, both halves). Pigeonhole guarantee: any
-    pair within distance 3 shares a band; 4..max_hamming pairs are
-    found when some band is untouched (stated LSH recall trade).
-
-    Hot-bucket guard (the ``minhash_candidate_pairs`` discipline):
-    buckets over ``max_bucket_rows`` degrade from clique to a STAR on
-    the bucket's minimum id — linear in bucket size. The oversized-
-    bucket list is one map-side-combinable aggregate over the
-    checkpointed hashes, collected driver-side (bounded:
-    ≤ 4·rows/cap entries, zero on any realistic corpus — real dHash
-    bands are near-uniform 16-bit values; the flood case is thousands
-    of IDENTICAL hashes, where the star is lossless through the
-    Hamming-0 center). The hash frame localCheckpoints first so the
-    upstream pipeline (grid synthesis or decode) runs once, not once
-    per self-join subtree plus once for the guard.
-
-    Input needs ``(id_col, dh_hi, dh_lo)`` with the id in the first
-    column; output ``(doc_a, doc_b, hamming)``, doc_a < doc_b."""
-    id_col = hashes.columns[0]
-    h = (
-        hashes.select(F.col(id_col).alias("_id"), "dh_hi", "dh_lo")
-        .filter(F.col("dh_hi").isNotNull())
-        .localCheckpoint()
-    )
+    """Banded near-dup pairs over dHash halves: each ``(dh_hi, dh_lo)``
+    explodes into 4 × 16-bit bands ``(k, bv)`` (integer div/mod), the
+    guarded banded self-join (:func:`_banded_self_join`) pairs rows that
+    share a band value, and candidates verify by exact Hamming distance
+    (``bit_count(a ^ b)``, both halves). ``ids`` maps the id columns of
+    ``h`` to output stems, the first one orienting the pair; output
+    ``{stem}_a``, ``{stem}_b`` per id, ``hi_*``/``lo_*`` and
+    ``hamming <= max_hamming``."""
     bands = h.select(
-        "_id",
+        *ids,
         "dh_hi",
         "dh_lo",
         F.explode(F.sequence(F.lit(0), F.lit(3))).alias("k"),
@@ -1727,74 +1697,52 @@ def dhash_near_dup_pairs(
         .otherwise(F.col("dh_lo") % 65536)
         .cast("bigint"),
     )
-    # bounded driver state: ≤ 4·rows / max_bucket_rows entries
-    over_rows = (
-        bands.groupBy("k", "bv")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.struct("_id", "dh_hi", "dh_lo")).alias("canon"),
-        )
-        .filter(F.col("n") > int(max_bucket_rows))
-        .collect()
+    cand = _banded_self_join(
+        bands, ["k", "bv"], {**ids, "dh_hi": "hi", "dh_lo": "lo"},
+        max_bucket_rows,
     )
-    small = bands
-    if over_rows:
-        over = bands.sparkSession.createDataFrame(
-            [
-                (r["k"], r["bv"], r["canon"]["_id"],
-                 r["canon"]["dh_hi"], r["canon"]["dh_lo"])
-                for r in over_rows
-            ],
-            "k int, bv bigint, c_id bigint, c_hi bigint, c_lo bigint",
-        )
-        small = bands.join(
-            F.broadcast(over.select("k", "bv")), ["k", "bv"], "left_anti"
-        )
-    a = small.select(
-        F.col("_id").alias("doc_a"),
-        F.col("dh_hi").alias("hi_a"),
-        F.col("dh_lo").alias("lo_a"),
-        "k",
-        "bv",
-    )
-    b = small.select(
-        F.col("_id").alias("doc_b"),
-        F.col("dh_hi").alias("hi_b"),
-        F.col("dh_lo").alias("lo_b"),
-        "k",
-        "bv",
-    )
-    cand = (
-        a.join(b, ["k", "bv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "hi_a", "lo_a", "hi_b", "lo_b")
-    )
-    if over_rows:
-        # star: every member of an oversized bucket pairs with the
-        # bucket's min id (canon < member by construction)
-        star = (
-            bands.join(F.broadcast(over), ["k", "bv"])
-            .filter(F.col("_id") != F.col("c_id"))
-            .select(
-                F.col("c_id").alias("doc_a"),
-                F.col("_id").alias("doc_b"),
-                F.col("c_hi").alias("hi_a"),
-                F.col("c_lo").alias("lo_a"),
-                F.col("dh_hi").alias("hi_b"),
-                F.col("dh_lo").alias("lo_b"),
-            )
-        )
-        cand = cand.unionByName(star)
-    cand = cand.distinct()
     ham = (
         F.bit_count(F.expr("hi_a ^ hi_b"))
         + F.bit_count(F.expr("lo_a ^ lo_b"))
     ).cast("bigint")
-    return (
-        cand.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= int(max_hamming))
-        .select("doc_a", "doc_b", "hamming")
+    return cand.withColumn("hamming", ham).filter(
+        F.col("hamming") <= int(max_hamming)
     )
+
+
+def dhash_near_dup_pairs(
+    hashes: DataFrame,
+    max_hamming: int = DHASH_MAX_HAMMING,
+    max_bucket_rows: int = LSH_MAX_BUCKET,
+) -> DataFrame:
+    """Banded near-dup pair generation over dHash halves — the image
+    twin of MinHash LSH, riding the same economics: each hash explodes
+    into 4 × 16-bit bands (integer div/mod), candidates are the pairs
+    sharing a band VALUE (an equality join on (band, value) — never
+    all-pairs), and candidates verify by exact Hamming distance
+    (``bit_count(a ^ b)``, both halves). Pigeonhole guarantee: any
+    pair within distance 3 shares a band; 4..max_hamming pairs are
+    found when some band is untouched (stated LSH recall trade).
+
+    Buckets over ``max_bucket_rows`` degrade to a star on the bucket's
+    minimum id — the guard contract is stated once, at
+    ``operators.dedup._banded_self_join``; a flood of identical hashes
+    stays lossless through the Hamming-0 center. The hash frame
+    localCheckpoints first so the upstream pipeline (grid synthesis or
+    decode) runs once, not once per self-join subtree plus once for
+    the guard.
+
+    Input needs ``(id_col, dh_hi, dh_lo)`` with the id in the first
+    column; output ``(doc_a, doc_b, hamming)``, doc_a < doc_b."""
+    id_col = hashes.columns[0]
+    h = (
+        hashes.select(F.col(id_col).alias("_id"), "dh_hi", "dh_lo")
+        .filter(F.col("dh_hi").isNotNull())
+        .localCheckpoint()
+    )
+    return _hamming_pairs(
+        h, {"_id": "doc"}, max_hamming, max_bucket_rows
+    ).select("doc_a", "doc_b", "hamming")
 
 
 def doc_grid_dhash(docs: DataFrame) -> DataFrame:
@@ -1814,58 +1762,69 @@ def doc_grid_dhash(docs: DataFrame) -> DataFrame:
     t = docs.select("doc_id", tokens("text").alias("toks")).filter(
         F.size("toks") > 0
     )
-    cells = (
-        t.select(
-            "doc_id",
-            "toks",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(DHASH_ROWS - 1))
-            ).alias("r"),
-        )
-        .select(
-            "doc_id",
-            "toks",
-            "r",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(DHASH_COLS - 1))
-            ).alias("c"),
-        )
-    )
+    return _grid_halves(t, ["doc_id"])
 
-    def px(col_expr):
-        return F.ascii(
-            F.substring(
-                F.md5(
-                    F.element_at(
-                        F.col("toks"),
-                        (col_expr % F.size("toks") + 1).cast("int"),
-                    )
-                ),
-                F.col("r") % 4 + 1,
-                1,
-            )
-        )
 
-    pos = F.lit(9) * F.col("r") + F.col("c")
-    bit = (px(pos) > px(pos + 1)).cast("bigint")
-    cells = cells.select("doc_id", "r", "c", bit.alias("b"))
-    return cells.groupBy("doc_id").agg(
+def _pack_halves(cells: DataFrame, keys: list[str]) -> DataFrame:
+    """The one 64-bit packer of the grid slices: ``(keys..., i, b)``
+    rows, bit ``b`` at index ``i`` in 0..63, sum to per-key halves —
+    bits 0..31 → ``dh_hi``, 32..63 → ``dh_lo`` (``_dhash_halves``' and
+    ``_audio_fp_halves``' packing as codegen'd SQL)."""
+    return cells.groupBy(*keys).agg(
         F.sum(
-            F.when(
-                F.col("r") < 4,
-                F.expr(f"shiftleft(b, r * {DHASH_COLS} + c)"),
-            ).otherwise(F.lit(0))
+            F.when(F.col("i") < 32, F.expr("shiftleft(b, i)")).otherwise(
+                F.lit(0)
+            )
         )
         .cast("bigint")
         .alias("dh_hi"),
         F.sum(
             F.when(
-                F.col("r") >= 4,
-                F.expr(f"shiftleft(b, (r - 4) * {DHASH_COLS} + c)"),
+                F.col("i") >= 32, F.expr("shiftleft(b, i - 32)")
             ).otherwise(F.lit(0))
         )
         .cast("bigint")
         .alias("dh_lo"),
+    )
+
+
+def _grid_halves(
+    t: DataFrame, keys: list[str], salt: Column | None = None
+) -> DataFrame:
+    """Per-key dHash halves of the deterministic 8×9 token grid: pixel
+    ``p`` of row ``r`` is the ascii of hex char ``r % 4`` of
+    ``md5(tok)`` (``md5(tok || ':' || salt)`` when salted), ``tok`` the
+    token at wrapped position ``p``; bit ``r*8+c`` is set when pixel
+    ``9r+c`` is brighter than its right neighbour. ``t`` carries
+    ``keys`` and the token array ``toks``."""
+    cells = t.select(
+        *keys,
+        "toks",
+        F.explode(F.sequence(F.lit(0), F.lit(DHASH_ROWS - 1))).alias("r"),
+    ).select(
+        *keys,
+        "toks",
+        "r",
+        F.explode(F.sequence(F.lit(0), F.lit(DHASH_COLS - 1))).alias("c"),
+    )
+
+    def px(col_expr):
+        tok = F.element_at(
+            F.col("toks"), (col_expr % F.size("toks") + 1).cast("int")
+        )
+        if salt is not None:
+            tok = F.concat_ws(":", tok, salt)
+        return F.ascii(F.substring(F.md5(tok), F.col("r") % 4 + 1, 1))
+
+    pos = F.lit(9) * F.col("r") + F.col("c")
+    bit = (px(pos) > px(pos + 1)).cast("bigint")
+    return _pack_halves(
+        cells.select(
+            *keys,
+            (F.col("r") * DHASH_COLS + F.col("c")).alias("i"),
+            bit.alias("b"),
+        ),
+        keys,
     )
 
 
@@ -1975,22 +1934,9 @@ def doc_grid_audio_fp(docs: DataFrame) -> DataFrame:
         )
 
     bit = (energy(F.col("w")) > energy(F.col("w") + 1)).cast("bigint")
-    cells = cells.select("doc_id", "w", bit.alias("b"))
-    return cells.groupBy("doc_id").agg(
-        F.sum(
-            F.when(F.col("w") < 32, F.expr("shiftleft(b, w)")).otherwise(
-                F.lit(0)
-            )
-        )
-        .cast("bigint")
-        .alias("dh_hi"),
-        F.sum(
-            F.when(
-                F.col("w") >= 32, F.expr("shiftleft(b, w - 32)")
-            ).otherwise(F.lit(0))
-        )
-        .cast("bigint")
-        .alias("dh_lo"),
+    return _pack_halves(
+        cells.select("doc_id", F.col("w").alias("i"), bit.alias("b")),
+        ["doc_id"],
     )
 
 
@@ -2022,71 +1968,17 @@ def doc_grid_video_dhash(
     t = docs.select(
         F.col("doc_id").alias("asset_id"), tokens("text").alias("toks")
     ).filter(F.size("toks") > 0)
-    cells = (
-        t.select(
-            "asset_id",
-            "toks",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(int(n_frames) - 1))
-            ).alias("frame_idx"),
-        )
-        .select(
-            "asset_id",
-            "toks",
-            "frame_idx",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(DHASH_ROWS - 1))
-            ).alias("r"),
-        )
-        .select(
-            "asset_id",
-            "toks",
-            "frame_idx",
-            "r",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(DHASH_COLS - 1))
-            ).alias("c"),
-        )
+    frames = t.select(
+        "asset_id",
+        "toks",
+        F.explode(
+            F.sequence(F.lit(0), F.lit(int(n_frames) - 1))
+        ).alias("frame_idx"),
     )
-
-    def px(col_expr):
-        return F.ascii(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.element_at(
-                            F.col("toks"),
-                            (col_expr % F.size("toks") + 1).cast("int"),
-                        ),
-                        F.col("frame_idx").cast("string"),
-                    )
-                ),
-                F.col("r") % 4 + 1,
-                1,
-            )
-        )
-
-    pos = F.lit(9) * F.col("r") + F.col("c")
-    bit = (px(pos) > px(pos + 1)).cast("bigint")
-    cells = cells.select("asset_id", "frame_idx", "r", "c", bit.alias("b"))
-    return cells.groupBy("asset_id", "frame_idx").agg(
-        F.sum(
-            F.when(
-                F.col("r") < 4,
-                F.expr(f"shiftleft(b, r * {DHASH_COLS} + c)"),
-            ).otherwise(F.lit(0))
-        )
-        .cast("bigint")
-        .alias("dh_hi"),
-        F.sum(
-            F.when(
-                F.col("r") >= 4,
-                F.expr(f"shiftleft(b, (r - 4) * {DHASH_COLS} + c)"),
-            ).otherwise(F.lit(0))
-        )
-        .cast("bigint")
-        .alias("dh_lo"),
+    return _grid_halves(
+        frames,
+        ["asset_id", "frame_idx"],
+        salt=F.col("frame_idx").cast("string"),
     ).select(
         "asset_id",
         F.col("frame_idx").cast("bigint").alias("frame_idx"),
@@ -2292,7 +2184,7 @@ def video_near_dup_pairs(
     frame_hashes: DataFrame,
     max_hamming: int = DHASH_MAX_HAMMING,
     min_shared: int = 2,
-    max_bucket_rows: int = DHASH_MAX_BUCKET,
+    max_bucket_rows: int = LSH_MAX_BUCKET,
 ) -> DataFrame:
     """Clip-level near-dup from frame-level evidence: two clips pair
     when at least ``min_shared`` of their sampled frames match within
@@ -2304,110 +2196,20 @@ def video_near_dup_pairs(
     verified frame pairs. Output ``(clip_a, clip_b, n_matched)``,
     clip_a < clip_b.
 
-    Hot-bucket guard: identical to :func:`dhash_near_dup_pairs` —
-    buckets over ``max_bucket_rows`` degrade to a star on the
-    bucket's minimum (asset_id, frame_idx); a clip flood (thousands
-    of byte-identical clips) stays linear, and the flood's clips
-    still pair through the center clip (every one of its frames
-    verifies at Hamming 0 against the center's same frame, so
-    ``n_matched`` reaches the vote threshold through the star)."""
+    Buckets over ``max_bucket_rows`` degrade to a star on the bucket's
+    minimum (asset_id, frame_idx) — the guard contract is stated once,
+    at ``operators.dedup._banded_self_join``. A clip flood still pairs
+    through the center clip: every one of its frames verifies at
+    Hamming 0 against the center's same frame, so ``n_matched``
+    reaches the vote threshold through the star."""
     h = (
         frame_hashes.filter(F.col("ok"))
         .select("asset_id", "frame_idx", "dh_hi", "dh_lo")
         .localCheckpoint()
     )
-    bands = h.select(
-        "asset_id",
-        "frame_idx",
-        "dh_hi",
-        "dh_lo",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("k"),
-    ).withColumn(
-        "bv",
-        F.when(F.col("k") == 0, F.expr("dh_hi div 65536"))
-        .when(F.col("k") == 1, F.col("dh_hi") % 65536)
-        .when(F.col("k") == 2, F.expr("dh_lo div 65536"))
-        .otherwise(F.col("dh_lo") % 65536)
-        .cast("bigint"),
-    )
-    # bounded driver state: ≤ 4·frame_rows / max_bucket_rows entries
-    over_rows = (
-        bands.groupBy("k", "bv")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(
-                F.struct("asset_id", "frame_idx", "dh_hi", "dh_lo")
-            ).alias("canon"),
-        )
-        .filter(F.col("n") > int(max_bucket_rows))
-        .collect()
-    )
-    small = bands
-    if over_rows:
-        over = bands.sparkSession.createDataFrame(
-            [
-                (r["k"], r["bv"], r["canon"]["asset_id"],
-                 r["canon"]["frame_idx"], r["canon"]["dh_hi"],
-                 r["canon"]["dh_lo"])
-                for r in over_rows
-            ],
-            "k int, bv bigint, c_clip bigint, c_frame bigint,"
-            " c_hi bigint, c_lo bigint",
-        )
-        small = bands.join(
-            F.broadcast(over.select("k", "bv")), ["k", "bv"], "left_anti"
-        )
-    a = small.select(
-        F.col("asset_id").alias("clip_a"),
-        F.col("frame_idx").alias("fa"),
-        F.col("dh_hi").alias("hi_a"),
-        F.col("dh_lo").alias("lo_a"),
-        "k",
-        "bv",
-    )
-    b = small.select(
-        F.col("asset_id").alias("clip_b"),
-        F.col("frame_idx").alias("fb"),
-        F.col("dh_hi").alias("hi_b"),
-        F.col("dh_lo").alias("lo_b"),
-        "k",
-        "bv",
-    )
-    cand = (
-        a.join(b, ["k", "bv"])
-        .filter(F.col("clip_a") < F.col("clip_b"))
-        .select("clip_a", "fa", "clip_b", "fb",
-                "hi_a", "lo_a", "hi_b", "lo_b")
-    )
-    if over_rows:
-        # star: members of an oversized bucket pair with the bucket's
-        # min (clip, frame); the center clip has the bucket-min
-        # asset_id, so orientation needs only the same-clip drop
-        star = (
-            bands.join(F.broadcast(over), ["k", "bv"])
-            .filter(F.col("asset_id") != F.col("c_clip"))
-            .select(
-                F.col("c_clip").alias("clip_a"),
-                F.col("c_frame").alias("fa"),
-                F.col("asset_id").alias("clip_b"),
-                F.col("frame_idx").alias("fb"),
-                F.col("c_hi").alias("hi_a"),
-                F.col("c_lo").alias("lo_a"),
-                F.col("dh_hi").alias("hi_b"),
-                F.col("dh_lo").alias("lo_b"),
-            )
-        )
-        cand = cand.unionByName(star)
-    matched = (
-        cand.distinct()
-        .withColumn(
-            "hamming",
-            (
-                F.bit_count(F.expr("hi_a ^ hi_b"))
-                + F.bit_count(F.expr("lo_a ^ lo_b"))
-            ).cast("bigint"),
-        )
-        .filter(F.col("hamming") <= int(max_hamming))
+    matched = _hamming_pairs(
+        h, {"asset_id": "clip", "frame_idx": "f"}, max_hamming,
+        max_bucket_rows,
     )
     return (
         matched.groupBy("clip_a", "clip_b")

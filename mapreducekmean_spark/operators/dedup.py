@@ -16,10 +16,13 @@ Scale design:
   no hot keys; true-Jaccard verification runs only on bucket-collided
   candidates, never all-pairs. This is the standard shingle→minhash→band→
   bucket-join pipeline, O(n) instead of O(n²).
-- SimHash: fixed-width bit-vote projection + band-bucket join, same shape.
+- SimHash: fixed-width bit-vote projection emitting band columns; it
+  runs no join of its own.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -32,13 +35,10 @@ N_HASHES = 8
 N_BANDS = 4
 ROWS_PER_BAND = N_HASHES // N_BANDS
 
-#: Hot-bucket bound for the LSH band self-join: a (band, bucket) with
-#: more rows than this degrades from the full candidate clique to a
-#: STAR centered on the bucket's minimum doc_id (linear, not
-#: quadratic). Far above any legitimate bucket (sf0.1 fixture max: 12);
-#: only byte-identical mass that skipped the staged exact dedup
-#: (pipeline.corpus_clean runs it BEFORE MinHash) collapses a bucket
-#: this far.
+#: Hot-bucket bound for every banded near-dup self-join (MinHash LSH
+#: and the dHash/video matchers): a bucket with more rows than this
+#: degrades from the candidate clique to a star — contract at
+#: :func:`_banded_self_join`.
 LSH_MAX_BUCKET = 1024
 
 #: SimHash: 32 bits (one per md5 hex nibble's high bit).
@@ -354,14 +354,103 @@ def minhash_bands(
     ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
+def _banded_self_join(
+    bands: DataFrame,
+    keys: list[str],
+    carry: dict[str, str],
+    max_bucket_rows: int,
+) -> DataFrame:
+    """The guarded banded self-join every near-dup matcher runs (MinHash
+    LSH here, image/audio dHash and video frames in ``multimodal``):
+    rows of ``bands`` with equal ``keys`` (``band, bucket`` or
+    ``k, bv``) pair up. ``carry`` maps each carried column to its output
+    stem; the output holds ``{stem}_a`` and ``{stem}_b`` per column,
+    distinct, oriented on the FIRST carried column (the id):
+    ``first_a < first_b``. ``bands`` is read three times (guard and both
+    join sides), so callers pass a checkpointed frame or a narrow
+    projection of one.
+
+    Hot-bucket guard: a flood of identical items (byte-identical docs
+    that skipped the staged exact dedup, thousands of identical images
+    or clips) collapses into one bucket per band and makes the
+    self-join quadratic in it. Buckets over ``max_bucket_rows``
+    therefore degrade from the candidate CLIQUE to a STAR: every member
+    pairs with the bucket minimum (``canon``, the min over the carried
+    columns, id first), ``first != canon``. The star is linear in
+    bucket size and lossless for the mass that causes it: identical
+    items verify against the center, and connected components
+    (``dedup_clusters``) group the whole bucket through it. The only
+    edges dropped are between NON-center members of an oversized bucket
+    — pairs the staged pipeline (exact dedup first,
+    ``pipeline.corpus_clean``) never produces; with every bucket under
+    the cap the output is identical to the uncapped clique (pinned in
+    tests/test_edge_cases.py). The oversized-bucket list is one
+    map-side-combinable aggregate, collected driver-side (bounded:
+    ≤ band_rows / cap entries, zero on any exact-deduped corpus — sf0.1
+    fixture max bucket: 12), so the common all-clear case keeps the
+    two-table plan with no extra joins; otherwise a broadcast
+    ``left_anti`` join drops the oversized buckets from the clique and
+    a broadcast join builds the star."""
+    cols = list(carry)
+    first = cols[0]
+    # a lone id keeps min(long), which plans as HashAggregate; min(struct)
+    # plans as SortAggregate, so it is used only when carrying more
+    canon = F.min(first) if len(cols) == 1 else F.min(F.struct(*cols))
+    # bounded driver state: ≤ band_rows / max_bucket_rows entries
+    over_rows = (
+        bands.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"), canon.alias("canon"))
+        .filter(F.col("n") > int(max_bucket_rows))
+        .collect()
+    )
+    small = bands
+    if over_rows:
+        types = dict(bands.dtypes)
+        over = bands.sparkSession.createDataFrame(
+            [
+                (*(r[k] for k in keys),
+                 *(r["canon"] if len(cols) > 1 else (r["canon"],)))
+                for r in over_rows
+            ],
+            ", ".join(
+                [f"{k} {types[k]}" for k in keys]
+                + [f"c_{s} {types[c]}" for c, s in carry.items()]
+            ),
+        )
+        small = bands.join(
+            F.broadcast(over.select(*keys)), keys, "left_anti"
+        )
+    a = small.alias("a")
+    b = small.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on.append(F.col(f"a.{first}") < F.col(f"b.{first}"))
+    clique = a.join(b, reduce(Column.__and__, on)).select(
+        *[F.col(f"a.{c}").alias(f"{s}_a") for c, s in carry.items()],
+        *[F.col(f"b.{c}").alias(f"{s}_b") for c, s in carry.items()],
+    )
+    if not over_rows:
+        return clique.distinct()
+    star = (
+        bands.join(F.broadcast(over), keys)
+        .filter(F.col(first) != F.col(f"c_{carry[first]}"))
+        .select(
+            *[F.col(f"c_{s}").alias(f"{s}_a") for s in carry.values()],
+            *[F.col(c).alias(f"{s}_b") for c, s in carry.items()],
+        )
+    )
+    return clique.unionByName(star).distinct()
+
+
 def minhash_candidate_pairs(
     docs: DataFrame,
     shingled: DataFrame | None = None,
     bands: DataFrame | None = None,
     max_bucket_rows: int = LSH_MAX_BUCKET,
 ) -> DataFrame:
-    """Candidate near-dup pairs: docs sharing any (band, bucket), deduped.
-    Shuffles on uniform md5 buckets — never all-pairs.
+    """Candidate near-dup pairs ``(doc_a, doc_b)``: docs sharing any
+    (band, bucket), deduped. Shuffles on uniform md5 buckets — never
+    all-pairs. Buckets over ``max_bucket_rows`` degrade to a star: the
+    guard contract is stated once, at :func:`_banded_self_join`.
 
     The band table is localCheckpoint'd before the self-join: Spark plans
     a self-join as two independent subtrees, so without materialization
@@ -371,68 +460,12 @@ def minhash_candidate_pairs(
     that stage standalone); the checkpoint is its in-session form.
     ``bands``: an already-CHECKPOINTED band table, for callers (the
     incremental delta path) that built one — passing it skips the whole
-    signature rebuild, not just the tokenize pass.
-
-    Hot-bucket guard: a direct caller on a NOT-exact-deduped corpus can
-    collapse thousands of byte-identical docs into one band bucket,
-    making the self-join quadratic in that bucket. Buckets over
-    ``max_bucket_rows`` therefore degrade from the candidate CLIQUE to a
-    STAR centered on the bucket's minimum doc_id — linear in bucket
-    size, and lossless for the mass that causes it: identical docs all
-    verify against the star center, and the connected-components
-    clustering (``dedup_clusters``) groups the whole bucket through it.
-    The only edges dropped are between NON-center members of an
-    oversized bucket — pairs the staged pipeline (exact dedup first,
-    ``pipeline.corpus_clean``) never produces, pinned in
-    tests/test_mixture_decon.py: with every bucket under the cap the
-    output is identical to the uncapped clique. The oversized-bucket
-    list is one map-side-combinable aggregate over the checkpointed
-    bands, collected driver-side (bounded: ≤ rows/cap entries, zero on
-    any exact-deduped corpus) so the common all-clear case keeps the
-    original two-table plan with no extra joins."""
+    signature rebuild, not just the tokenize pass."""
     if bands is None:
         bands = minhash_bands(docs, shingled).localCheckpoint()
-    # bounded driver state: ≤ total_band_rows / max_bucket_rows entries
-    over_rows = (
-        bands.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("canon"))
-        .filter(F.col("n") > max_bucket_rows)
-        .collect()
+    return _banded_self_join(
+        bands, ["band", "bucket"], {"doc_id": "doc"}, max_bucket_rows
     )
-    small = bands
-    if over_rows:
-        over = bands.sparkSession.createDataFrame(
-            [(r["band"], r["bucket"], r["canon"]) for r in over_rows],
-            "band bigint, bucket string, canon bigint",
-        )
-        small = bands.join(
-            F.broadcast(over.select("band", "bucket")),
-            ["band", "bucket"],
-            "left_anti",
-        )
-    a = small.alias("a")
-    b = small.alias("b")
-    clique = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-    )
-    if not over_rows:
-        return clique.distinct()
-    star = (
-        bands.join(
-            F.broadcast(over.select("band", "bucket", "canon")),
-            ["band", "bucket"],
-        )
-        .filter(F.col("doc_id") != F.col("canon"))
-        .select(
-            F.col("canon").alias("doc_a"), F.col("doc_id").alias("doc_b")
-        )
-    )
-    return clique.unionByName(star).distinct()
 
 
 def _jaccard(sa: Column, sb: Column) -> Column:
@@ -551,16 +584,40 @@ def verified_pairs(
     every positive threshold, and the reason ``threshold > 0`` is now
     an explicit requirement (the array form scored disjoint candidate
     pairs jaccard 0.0, which a ``>= 0.0`` filter would have kept)."""
+    return _scored_lsh_pairs(
+        "verified_pairs", docs, threshold, "jaccard", shingled, bands
+    )
+
+
+def _require_positive_threshold(threshold: float, who: str) -> None:
+    """Refuse ``threshold <= 0`` for a counting-join scorer, before any
+    job runs: the counting join never materializes zero-intersection
+    candidate pairs, so a non-positive threshold would silently change
+    semantics."""
     if threshold <= 0:
         raise ValueError(
-            "verified_pairs requires threshold > 0: the counting join "
-            "never materializes zero-intersection candidate pairs, so a "
+            f"{who} requires threshold > 0: the counting join never "
+            "materializes zero-intersection candidate pairs, so a "
             "non-positive threshold would silently change semantics "
             "(use the LSH candidate set directly for threshold 0)"
         )
-    # ``shingled``: an already-checkpointed distinct-gram table (same
-    # contract as minhash_signature's parameter) so callers that built
-    # one — the incremental delta path — don't tokenize twice.
+
+
+def _scored_lsh_pairs(
+    who: str,
+    docs: DataFrame,
+    threshold: float,
+    metric: str,
+    shingled: DataFrame | None = None,
+    bands: DataFrame | None = None,
+) -> DataFrame:
+    """The body of ``verified_pairs`` and ``containment_pairs``: LSH
+    candidates scored by ``metric`` through the counting join over one
+    checkpointed distinct-gram table. ``shingled``: an
+    already-checkpointed distinct-gram table (same contract as
+    minhash_signature's parameter) so callers that built one — the
+    incremental delta path — don't tokenize twice."""
+    _require_positive_threshold(threshold, who)
     sh_rows = (
         gram_rows(docs).distinct().localCheckpoint()
         if shingled is None
@@ -568,7 +625,9 @@ def verified_pairs(
     )
     cand = minhash_candidate_pairs(docs, shingled=sh_rows, bands=bands)
     sizes = sh_rows.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    return score_candidate_pairs(cand, sh_rows, sizes, threshold=threshold)
+    return score_candidate_pairs(
+        cand, sh_rows, sizes, threshold=threshold, metric=metric
+    )
 
 
 def score_candidate_pairs(
@@ -1186,13 +1245,11 @@ def containment_pairs(
     production scale, pair this scorer with a suffix/substring pass
     (``repeated_ngram_spans``) for the within-doc form. Same counting-
     join plumbing as ``verified_pairs`` — one copy of the arithmetic
-    (``score_candidate_pairs``), no per-pair array lambdas.
+    (``score_candidate_pairs``), no per-pair array lambdas — and the
+    same ``threshold > 0`` requirement.
     """
-    sh_rows = gram_rows(docs).distinct().localCheckpoint()
-    cand = minhash_candidate_pairs(docs, shingled=sh_rows)
-    sizes = sh_rows.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    return score_candidate_pairs(
-        cand, sh_rows, sizes, threshold=threshold, metric="containment"
+    return _scored_lsh_pairs(
+        "containment_pairs", docs, threshold, "containment"
     )
 
 

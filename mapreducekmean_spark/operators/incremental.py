@@ -64,6 +64,7 @@ from pyspark.sql import functions as F
 
 from mapreducekmean_spark.operators.dedup import (
     VERIFY_THRESHOLD,
+    _require_positive_threshold,
     gram_rows,
     minhash_bands,
     minhash_candidate_pairs,
@@ -334,12 +335,7 @@ def dedup_delta(
     scales with the BATCH and its candidate fan-out, never with the
     landed corpus size.
     """
-    if threshold <= 0:
-        raise ValueError(
-            "dedup_delta requires threshold > 0 (the counting join "
-            "never materializes zero-intersection pairs, same contract "
-            "as verified_pairs)"
-        )
+    _require_positive_threshold(threshold, "dedup_delta")
     _require_index(spark, name, "dedup_delta")
     idx_sizes = read_bucketed(spark, f"{name}_sizes")
     # the sizes table is the full landed-id roster (one row per doc,

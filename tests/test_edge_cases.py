@@ -948,6 +948,79 @@ def test_lsh_hot_bucket_cap_is_lossless_below_cap(spark):
     assert capped == uncapped and capped
 
 
+def test_lsh_hot_bucket_star_plus_clique(spark):
+    """The guard's mixed case: a 40-doc identical flood trips the cap in
+    every band (star on the flood minimum) while an unrelated near-dup
+    pair stays in the under-cap clique — the star and the clique meet
+    in one output, and outside the flood it equals the uncapped
+    output."""
+    from mapreducekmean_spark.operators.dedup import minhash_candidate_pairs
+
+    flood = (
+        "the quick brown fox jumps over the lazy dog while rain falls "
+        "softly on the quiet green meadow beside the old stone bridge"
+    )
+    near = (
+        "river barges carry timber downstream past mills and orchards "
+        "toward the harbour where merchants weigh grain at dawn {}"
+    )
+    docs = spark.createDataFrame(
+        [(i, flood) for i in range(40)]
+        + [(100, near.format("daily")), (101, near.format("weekly"))],
+        "doc_id bigint, text string",
+    ).select(
+        "doc_id", "text", F.lit("en").alias("lang"), F.lit("s").alias("source")
+    )
+    capped = {
+        tuple(r) for r in minhash_candidate_pairs(
+            docs, max_bucket_rows=8
+        ).collect()
+    }
+    flood_edges = {p for p in capped if p[1] < 100}
+    assert flood_edges == {(0, j) for j in range(1, 40)}
+    assert (100, 101) in capped
+    uncapped = {
+        tuple(r) for r in minhash_candidate_pairs(
+            docs, max_bucket_rows=10**9
+        ).collect()
+    }
+    assert capped - flood_edges == {p for p in uncapped if p[0] >= 100}
+
+
+@pytest.mark.parametrize(
+    "entry", ["verified_pairs", "containment_pairs", "dedup_delta"]
+)
+def test_counting_join_scorers_refuse_nonpositive_threshold(spark, entry):
+    """The counting join drops zero-intersection candidates, so every
+    public scorer over it refuses ``threshold <= 0`` — before any job
+    runs."""
+    from mapreducekmean_spark.operators import dedup
+    from mapreducekmean_spark.operators.incremental import dedup_delta
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma epsilon")],
+        "doc_id bigint, text string",
+    )
+    call = {
+        "verified_pairs": lambda: dedup.verified_pairs(docs, threshold=0.0),
+        "containment_pairs": lambda: dedup.containment_pairs(
+            docs, threshold=0.0
+        ),
+        "dedup_delta": lambda: dedup_delta(
+            spark, docs, "no_such_index", threshold=0.0
+        ),
+    }[entry]
+    sc = spark.sparkContext
+    group = f"threshold-guard-{entry}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=r"threshold > 0"):
+            call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_seasonal_anomaly_ignores_periodic_nights(spark):
     """The seasonal baseline's reason to exist, pinned: a daily-periodic
     stream (20 events/hour daytime, 1 event/hour at night, 14 days) plus
