@@ -2,8 +2,9 @@
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line:
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q": sec, ...}, "sf": <sf>}
+    {"metric": "...", "value": <total sec>, "unit": "sec", "sf": <sf>,
+     ..., "spark.master": "local[N]", "defaultParallelism": N,
+     "queries": {"q": sec, ...}}
 
 Each query is materialized through the noop sink (full execution, no
 driver collection cost). A full warmup pass at sf0.001 (different data,
@@ -92,6 +93,8 @@ def main() -> None:
         "timing": "min_of_2",
         "n_queries": len(timings),
         "queries_file": "bench_queries.json",
+        "spark.master": spark.sparkContext.master,
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
         "queries": timings,
     }
     out_path = os.path.join(

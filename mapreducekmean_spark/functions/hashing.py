@@ -33,13 +33,3 @@ def stable_order_key(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(c.cast("string"))
-
-
-def hex_prefix_long(hex_col: Column, n: int = 15) -> Column:
-    """First ``n`` hex chars of a digest as a non-negative bigint.
-
-    ``n<=15`` keeps the value < 2^60, inside signed-64 range. Spark-side
-    only (uses ``conv``); oracle-facing operators stick to string-min
-    hashing instead (DuckDB 1.0 has no hex→int conversion).
-    """
-    return F.conv(F.substring(hex_col, 1, n), 16, 10).cast("bigint")

@@ -121,10 +121,3 @@ def argmin_index(dists: Column) -> Column:
     exact tie. ``array_position`` returns the 1-based first occurrence.
     """
     return (F.array_position(dists, F.array_min(dists)) - F.lit(1)).cast("bigint")
-
-
-def nearest_centroid(point: Column, centroids: Column) -> Column:
-    """Distances from ``point`` to every centroid in a literal
-    ``array<array<double>>`` — the broadcast nested-loop of
-    ``PointsMapper.java:59-81`` as one codegen'd projection."""
-    return F.transform(centroids, lambda c: sq_dist(point, c))

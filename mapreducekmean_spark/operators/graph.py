@@ -5,8 +5,8 @@ iterative K-Means job, ``/root/reference/src/MapReduceKMean/
 KMeans.java``); the engine's dedup family, however, already BUILDS pair
 graphs — MinHash candidate pairs, embedding near-dups — and runs
 pointer-jumping connected components over them
-(``operators/dedup.py:446``). This module adds the two standard
-analytics a corpus pipeline runs on those same graphs:
+(``operators.dedup.connected_components``). This module adds the two
+standard analytics a corpus pipeline runs on those same graphs:
 
 - **triangle counting** — how clustered is the near-dup neighborhood; a
   transitivity check on the pair graph (pairs that close triangles are

@@ -5,12 +5,16 @@ driver loop ``/root/reference/src/KMeans.java``, map-side assignment
 ``/root/reference/src/MapReduceKMean/PointsMapper.java``, reduce-side mean
 ``/root/reference/src/MapReduceKMean/PointsReducer.java``.
 
-Physical shape per iteration (what Catalyst plans from these expressions):
-``Scan parquet → Project (codegen'd argmin over a constant-folded centroid
-literal) → HashAggregate(partial) → Exchange hashpartitioning(cluster_id)
-→ HashAggregate(final)`` — exactly the reference's
-map → combine → shuffle → reduce pipeline (``KMeans.java:207-215``), with
-two deliberate fixes documented in SURVEY.md §2.1:
+Physical shape of one Lloyd step as the one-step operators declare it
+(``assign``/``centroid_update_wide``/``wssse_per_cluster`` — what Catalyst
+plans from these expressions): ``Scan parquet → Project (codegen'd argmin
+over a constant-folded centroid literal) → HashAggregate(partial) →
+Exchange hashpartitioning(cluster_id) → HashAggregate(final)`` — exactly
+the reference's map → combine → shuffle → reduce pipeline
+(``KMeans.java:207-215``). The iterative driver :func:`lloyd` does NOT
+re-plan this aggregate per iteration; it runs the same math over numpy
+blocks in :func:`fold_loop` (see there for why). Both keep two deliberate
+fixes documented in SURVEY.md §2.1:
 
 - **R8 combiner weighting bug not replicated**: the reference's combiner
   emits unweighted per-split means, so results depend on task split
@@ -273,9 +277,10 @@ def lloyd(
 ) -> LloydResult:
     """R14 — the full iterative driver loop, Spark-first.
 
-    Structure mirrors ``KMeans.java:204-234``: one distributed job per
-    iteration (assignment + aggregation), k×d floats collected to the
-    driver, convergence = every coordinate of every centroid moved < tol
+    Structure mirrors ``KMeans.java:204-234``: one distributed pass per
+    iteration (assignment + aggregation; the whole loop is one task when
+    ``points`` is one partition), k×d floats back to the driver,
+    convergence = every coordinate of every centroid moved < tol
     (``KMeans.java:102-111``). Differences (SURVEY §2.1): correctly
     weighted partial aggregation (R8) and deterministic init (R3).
     Empty clusters keep their previous centroid (``KMeans.java:129-144``).
@@ -294,7 +299,7 @@ def lloyd(
     import numpy as np
 
     C, history, converged, it = fold_loop(
-        _numpy_blocks(points),
+        points,
         np.array(cents, dtype=np.float64),
         _block_partials,
         partial(_advance, tol=tol),
@@ -390,21 +395,18 @@ def _block_partials(X, C):
     ``partials`` of :func:`fold_loop`.
 
     Exactness: squared-L2 accumulates per-dimension (``acc += d*d`` one
-    dimension at a time), bit-identical to the sequential HOF fold in
-    ``functions/vector.py``; ``argmin`` is first-wins like the strict
-    ``<`` compare at ``PointsMapper.java:70-74``.
+    dimension at a time, all k centroids at once on an (n, k) array),
+    bit-identical to the sequential HOF fold in ``functions/vector.py``;
+    ``argmin`` is first-wins like the strict ``<`` compare at
+    ``PointsMapper.java:70-74``.
     """
     import numpy as np
 
     k_, dim = C.shape
-    n_loc = X.shape[0]
-    dists = np.empty((n_loc, k_))
-    for j in range(k_):
-        acc = np.zeros(n_loc)
-        for d in range(dim):
-            diff = X[:, d] - C[j, d]
-            acc += diff * diff
-        dists[:, j] = acc
+    dists = np.zeros((X.shape[0], k_))
+    for d in range(dim):
+        diff = X[:, d, None] - C[None, :, d]
+        dists += diff * diff
     a = np.argmin(dists, axis=1)
     sums = np.zeros((k_, dim))
     counts = np.zeros(k_, dtype=np.int64)
@@ -450,57 +452,73 @@ def _run_loop(reduce_step, state, advance, max_iter):
     return state, history, converged, it
 
 
-def fold_loop(blocks, state, partials, advance, max_iter):
+def fold_loop(points, state, partials, advance, max_iter):
     """The Lloyd fold driver — the map → combine → reduce iteration of
-    ``KMeans.java:204-234`` over an RDD of ``(ids, X)`` numpy blocks,
-    shared by k-means (:func:`lloyd`) and PQ codebook training.
+    ``KMeans.java:204-234`` over the numpy blocks of a ``(vec_id, emb)``
+    DataFrame, shared by k-means (:func:`lloyd`) and PQ codebook
+    training.
 
     Each iteration folds ``partials(X, state) -> (sums, counts)`` over
     every block, then ``advance(state, sums, counts) -> (state, move,
     done)``; returns ``(state, history, converged, iterations)`` with
     ``history`` the per-iteration ``move``.
 
-    Why RDD and not the DataFrame agg: the declared one-step operators
-    (``assign_nearest``/``centroid_update``) keep the declarative plan,
-    but a *driver loop* re-analyzes that plan every iteration —
-    measured ~208 ms of Catalyst analysis per iteration at fixture
-    scale (the centroid literal changes, so nothing is reused) plus
-    ~250 ms interpreted-HOF execution, ≈0.45 s/iter. The numpy block
-    path runs the identical math vectorized with zero per-iteration
-    planning: ≈0.21 s/iter measured, same assignments (0 mismatches
-    over 20 iterations at sf0.1).
+    Why blocks and not the DataFrame agg: the declared one-step
+    operators (``assign_nearest``/``centroid_update``) keep the
+    declarative plan, but a *driver loop* re-analyzes that plan every
+    iteration — measured ~208 ms of Catalyst analysis per iteration at
+    fixture scale (the centroid literal changes, so nothing is reused)
+    plus ~250 ms interpreted-HOF execution, ≈0.45 s/iter. The numpy
+    block path runs the identical math vectorized with zero
+    per-iteration planning: ≈0.21 s/iter measured, same assignments (0
+    mismatches over 20 iterations at sf0.1).
 
-    Single-task fold: when ``blocks`` has ONE partition, every
+    Single-task fold: when ``points`` has ONE partition, every
     per-iteration job would be a one-task job whose reduce is just that
-    partition's left fold — so the whole loop runs inside a single task
-    (same partials, same fold order → bit-identical state), turning
-    up-to-``max_iter`` jobs into 1. This build's Python-task floor is
-    ~150 ms/job regardless of work.
+    partition's left fold — so the whole loop runs inside the one
+    ``mapInArrow`` task that decodes the Arrow batches (same blocks,
+    same partials, same fold order → bit-identical state), which sends
+    back only the pickled result row. That turns up-to-``max_iter``
+    jobs into 1 job with ONE Python worker: every Python worker task
+    pays a fixed ~120 ms (measured on 4 vCPUs, Python 3.11) in
+    ``setup_spark_files``'s ``importlib.invalidate_caches()``, where
+    each zipimporter over ``pyspark.zip`` re-reads the archive
+    directory — a cost independent of the task's work.
 
-    Otherwise the blocks are cached for the loop (unless the caller
-    already cached them), and each iteration broadcasts the state and
-    runs one ``treeReduce`` of the partials — nothing but the bounded
-    partial aggregates crosses the wire, exactly MLlib's
-    ``RDD.treeAggregate`` strategy. Tree depth is 1 up to 64 partitions
-    and 2 above: a depth-2 merge bounds driver fan-in at ~sqrt(P) for
-    the 1000-executor case; below that one reduce suffices (measured
+    Otherwise the blocks are built (:func:`_numpy_blocks`) and cached
+    for the loop, and each iteration broadcasts the state and runs one
+    ``treeReduce`` of the partials — nothing but the bounded partial
+    aggregates crosses the wire, exactly MLlib's ``RDD.treeAggregate``
+    strategy. Tree depth is 1 up to 64 partitions and 2 above: a
+    depth-2 merge bounds driver fan-in at ~sqrt(P) for the
+    1000-executor case; below that one reduce suffices (measured
     equivalent at fixture scale, where the loop is bounded by per-job
     scheduling latency, not by the merge).
     """
-    if blocks.getNumPartitions() == 1:
+    import pickle
 
-        def run(parts):
-            Xs = [X for _ids, X in parts]
+    frame = points.select("vec_id", "emb")
+    if frame.rdd.getNumPartitions() == 1:
+
+        def run(batches):
+            import pyarrow as pa
+
+            Xs = [X for _ids, X in arrow_blocks(batches)]
 
             def step(st):
                 if not Xs:
                     raise ValueError("empty input: no blocks to fold over")
                 return reduce(_add_partials, (partials(X, st) for X in Xs))
 
-            yield _run_loop(step, state, advance, max_iter)
+            out = pickle.dumps(_run_loop(step, state, advance, max_iter))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([out], type=pa.binary())], names=["result"]
+            )
 
-        return blocks.mapPartitions(run).collect()[0]
+        row = frame.mapInArrow(run, "result binary").collect()[0]
+        return pickle.loads(row.result)
 
+    blocks = _numpy_blocks(frame).cache()
     depth = 1 if blocks.getNumPartitions() <= 64 else 2
     sc = blocks.context
 
@@ -513,14 +531,10 @@ def fold_loop(blocks, state, partials, advance, max_iter):
         finally:
             bc.unpersist()
 
-    owned = not blocks.is_cached
-    if owned:
-        blocks.cache()
     try:
         return _run_loop(step, state, advance, max_iter)
     finally:
-        if owned:
-            blocks.unpersist()
+        blocks.unpersist()
 
 
 def lloyd_assignments(

@@ -21,9 +21,9 @@ K-Means core, just M codebooks at once:
 
 - **training** is Lloyd over all M subspaces SIMULTANEOUSLY through
   ``kmeans.fold_loop``, the fold driver k-means uses, on the same
-  ``kmeans._numpy_blocks`` representation (Arrow-built numpy blocks —
-  MLlib's own strategy): per iteration the (m, k, ds) codebook array
-  is broadcast and the (m×k×ds sums, m×k counts) partials fold back —
+  Arrow-decoded numpy blocks (``kmeans.arrow_blocks`` — MLlib's own
+  strategy): per iteration the (m, k, ds) codebook array meets every
+  block and the (m×k×ds sums, m×k counts) partials fold back —
   centroid_update's bounded combine payload times M, with zero
   per-iteration Catalyst planning;
 - **init** is the md5-deterministic k-sample (``kmeans.md5_seed_rows``,
@@ -97,7 +97,7 @@ def _codes_np(X, cb):
     argmin (numpy first-occurrence = first-wins, mirroring
     ``kmeans.assign``'s strict-< loop) is bit-faithful to it. This is
     the hot kernel of both training and encoding; it rides the
-    ``kmeans._numpy_blocks`` Arrow machinery rather than a Catalyst
+    ``kmeans.arrow_blocks`` Arrow machinery rather than a Catalyst
     expression because both alternatives measured badly at 1M×64
     (SCALE.md round 7): lambda higher-order functions are
     CodegenFallback (interpreted per row), and a statically unrolled
@@ -148,7 +148,7 @@ def train_pq_codebooks(
 
     # tol=0: the max movement is never negative, so every pass runs
     cb, _history, _converged, _it = km.fold_loop(
-        km._numpy_blocks(points),
+        points,
         np.asarray(codebooks),
         _pq_block_partials,
         partial(km._advance, tol=0.0),

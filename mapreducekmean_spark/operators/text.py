@@ -107,10 +107,6 @@ def lang_scores_from(t: Column) -> list[tuple[str, Column]]:
     return out
 
 
-def lang_scores(col: Column | str = "text") -> list[tuple[str, Column]]:
-    return lang_scores_from(tokens(col))
-
-
 def lang_id(docs: DataFrame) -> DataFrame:
     """Language-ID heuristic: marker-word hit count per language, argmax
     with deterministic tie-break (highest score, then language name asc).
@@ -241,16 +237,6 @@ def quality_expr(text_col: str = "text") -> Column:
     an expression tree cannot share its token-array subtree)."""
     _, _, score = _quality_parts(text_col)
     return F.round(score, 6)
-
-
-def quality_keep_expr(text_col: str = "text") -> Column:
-    """The quality-gate verdict (score ≥ 0.5, computed on the UNROUNDED
-    score, exactly as :func:`quality_score`'s ``keep`` column) as a
-    scan-site expression — a quality gate is a plain ``filter`` on
-    this, not a join against the score table. Volume paths filter on
-    :func:`with_quality`'s ``q_keep`` instead (one tokenize/row)."""
-    _, _, score = _quality_parts(text_col)
-    return score >= 0.5
 
 
 def quality_score(docs: DataFrame) -> DataFrame:

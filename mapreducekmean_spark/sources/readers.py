@@ -36,6 +36,32 @@ _NANOS_TS_COLS = {
 }
 
 
+#: Driver-side memo of each fixture file's inferred schema, keyed by
+#: (realpath, size, st_mtime_ns) like ``kmeans._INIT_MEMO``. Parquet
+#: schema inference runs one Spark job per read (a footer read in a
+#: task); a read with the schema given runs none. The stat fingerprint
+#: re-infers when a file is rewritten in place. Only regular files are
+#: memoized: a dataset directory's own stat does not change when a part
+#: file is rewritten.
+_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema from
+    :data:`_SCHEMA_MEMO` when the file was read before."""
+    import os
+
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (os.path.realpath(path), st.st_size, st.st_mtime_ns)
+    if key in _SCHEMA_MEMO:
+        return spark.read.schema(_SCHEMA_MEMO[key]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table from ``{sf_dir}/{name}.parquet``.
 
@@ -81,7 +107,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ntz_old = spark.conf.get(ntz_key)
     spark.conf.set(ntz_key, "false")
     try:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     finally:
         spark.conf.set(ntz_key, ntz_old)
     for col in _NANOS_TS_COLS.get(name, ()):

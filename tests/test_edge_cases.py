@@ -1490,7 +1490,7 @@ def test_dhash_hot_bucket_guard_degrades_to_star(spark):
 
     # 40 identical hashes (the flood) + one near-dup pair clear of it
     flood = [(i, 0x1234_5678_0000_0000 % (1 << 62), 0xABCD) for i in range(40)]
-    pair = [(100, 7 << 32, 9), (101, 7 << 32, 8)]  # hamming 2 (9^8=1... bits)
+    pair = [(100, 7 << 32, 9), (101, 7 << 32, 8)]  # hamming 1 (9^8 == 1)
     hashes = spark.createDataFrame(
         flood + pair, "doc_id bigint, dh_hi bigint, dh_lo bigint"
     )

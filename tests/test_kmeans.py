@@ -94,34 +94,102 @@ def test_empty_cluster_keeps_previous_centroid(spark):
 
 
 @pytest.mark.parametrize("kernel", ["kmeans", "pq"])
-def test_fold_loop_multi_partition_matches_single_task(points, kernel):
-    """``fold_loop``'s distributed branch (cached blocks, broadcast
-    state, per-iteration treeReduce) folds the same partials in the same
-    order as its single-task branch: with one block per partition, the
-    state, history and iteration count are identical."""
-    from functools import partial
+def test_fold_loop_multi_partition_matches_single_task(spark, points, kernel):
+    """Both branches of ``fold_loop`` — the distributed one (cached
+    blocks, broadcast state, per-iteration treeReduce) on a 3-partition
+    frame with one block per partition, and the fused single-task
+    ``mapInArrow`` on one partition of several Arrow batches — equal
+    ``_run_loop`` folded driver-side over the same blocks in partition
+    order: state, history and iteration count identical."""
+    from functools import partial, reduce
 
     import numpy as np
 
     from mapreducekmean_spark.operators import pq
 
-    if kernel == "kmeans":
-        cents = km.collect_centroids(km.deterministic_init(points, 10))
-        state = np.array(cents, dtype=np.float64)
-        partials, advance = km._block_partials, partial(km._advance, tol=1e-3)
-    else:
-        state = np.asarray(pq.train_pq_codebooks(points, 64, iters=0))
-        partials, advance = pq._pq_block_partials, partial(km._advance, tol=0.0)
-    blocks = km._numpy_blocks(points.repartition(3, "vec_id")).cache()
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    batch_old = spark.conf.get(batch_conf)
+    # The fixture's float32 values sum exactly in double in any order;
+    # a third of them has full-width mantissas, so fold order shows.
+    frame = points.select(
+        "vec_id", F.expr("transform(emb, x -> x / 3)").alias("emb")
+    ).repartition(3, "vec_id").cache()
     try:
-        assert blocks.getNumPartitions() == 3
-        multi = km.fold_loop(blocks, state, partials, advance, 6)
-        single = km.fold_loop(blocks.coalesce(1), state, partials, advance, 6)
+        if kernel == "kmeans":
+            cents = km.collect_centroids(km.deterministic_init(frame, 10))
+            state = np.array(cents, dtype=np.float64)
+            partials = km._block_partials
+            advance = partial(km._advance, tol=1e-3)
+        else:
+            state = np.asarray(pq.train_pq_codebooks(frame, 64, iters=0))
+            partials = pq._pq_block_partials
+            advance = partial(km._advance, tol=0.0)
+        assert frame.rdd.getNumPartitions() == 3
+        for part, batch in ((frame, batch_old), (frame.coalesce(1), "128")):
+            spark.conf.set(batch_conf, batch)
+            Xs = [X for _ids, X in km._numpy_blocks(part).collect()]
+            assert len(Xs) >= 3
+
+            def step(st, Xs=Xs):
+                return reduce(km._add_partials, (partials(X, st) for X in Xs))
+
+            want = km._run_loop(step, state, advance, 6)
+            got = km.fold_loop(part, state, partials, advance, 6)
+            assert got[3] >= 1 and len(got[1]) == got[3]
+            assert got[1:] == want[1:]
+            assert np.array_equal(got[0], want[0])
     finally:
-        blocks.unpersist()
-    assert multi[3] >= 1 and len(multi[1]) == multi[3]
-    assert multi[1:] == single[1:]
-    assert np.array_equal(multi[0], single[0])
+        spark.conf.set(batch_conf, batch_old)
+        frame.unpersist()
+
+
+def _loop_partials(X, C):
+    """Reference for ``_block_partials``: one centroid at a time, one
+    dimension at a time, per-point Python argmin with strict ``<``."""
+    import numpy as np
+
+    dists = np.zeros((X.shape[0], C.shape[0]))
+    for j in range(C.shape[0]):
+        for d in range(C.shape[1]):
+            diff = X[:, d] - C[j, d]
+            dists[:, j] += diff * diff
+    a = []
+    for row in dists:
+        best = 0
+        for j in range(1, len(row)):
+            if row[j] < row[best]:
+                best = j
+        a.append(best)
+    a = np.array(a)
+    sums = np.array([X[a == j].sum(axis=0) for j in range(C.shape[0])])
+    return sums, np.bincount(a, minlength=C.shape[0])
+
+
+def test_block_partials_match_loop_and_assign(spark):
+    """``_block_partials`` (the (n, k) vectorized kernel) equals the
+    per-centroid loop exactly, and counts what ``cluster_sizes(assign(
+    ...))`` counts, including a point at an exact tie between centroids
+    0 and 1, which goes to centroid 0 (the strict ``<`` first-wins of
+    ``PointsMapper.java:70-74``)."""
+    import numpy as np
+
+    pts = [[0.0, 0.0], [2.0, 0.0], [1.0, 0.0], [5.0, 5.0]]  # [1, 0] ties
+    cents = [[0.0, 0.0], [2.0, 0.0], [10.0, 10.0]]
+    X, C = np.array(pts), np.array(cents)
+    sums, counts = km._block_partials(X, C)
+    df = spark.createDataFrame(
+        list(enumerate(pts)), "vec_id bigint, emb array<double>"
+    )
+    sizes = dict(km.cluster_sizes(km.assign(df, cents)).collect())
+    assert counts.tolist() == [sizes.get(j, 0) for j in range(len(cents))]
+    assert counts.tolist() == [2, 2, 0]
+    assert sums.tolist() == [[1.0, 0.0], [7.0, 5.0], [0.0, 0.0]]
+
+    rng = np.random.default_rng(7)
+    for X, C in [(X, C), (rng.normal(size=(300, 16)), rng.normal(size=(7, 16)))]:
+        got, want = km._block_partials(X, C), _loop_partials(X, C)
+        assert np.array_equal(got[0], want[0])
+        assert np.array_equal(got[1], want[1])
 
 
 def test_golden_centroids_sf0001(points):

@@ -321,6 +321,51 @@ def test_load_table_timestamps_native_and_pushable(spark, sf_small):
     assert "GreaterThanOrEqual(l_shipdate" in pushed, pushed
 
 
+def _load_counting_jobs(spark, sf_dir, name):
+    """``load_table`` under its own job group: (frame, jobs launched)."""
+    sc = spark.sparkContext
+    group = f"load-table-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        df = load_table(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_memoizes_schema(spark, sf_small, tmp_path, monkeypatch):
+    """A repeat ``load_table`` of an unchanged fixture file launches no
+    schema-inference job and returns the same schema and rows; a file
+    rewritten in place is inferred afresh."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreducekmean_spark.sources import readers
+
+    monkeypatch.setattr(readers, "_SCHEMA_MEMO", {}, raising=False)
+    for name in readers.TABLES:
+        first = load_table(spark, sf_small, name)
+        again, jobs = _load_counting_jobs(spark, sf_small, name)
+        assert jobs == 0, name
+        assert again.schema == first.schema, name
+        assert sorted(map(repr, again.collect())) == sorted(
+            map(repr, first.collect())
+        ), name
+
+    src = pq.read_table(f"{sf_small}/region.parquet")
+    pq.write_table(src, tmp_path / "region.parquet")
+    assert load_table(spark, str(tmp_path), "region").schema.names == (
+        src.column_names
+    )
+    pq.write_table(
+        src.append_column("r_extra", pa.array(range(src.num_rows))),
+        tmp_path / "region.parquet",
+    )
+    df, jobs = _load_counting_jobs(spark, str(tmp_path), "region")
+    assert jobs >= 1
+    assert df.schema.names == src.column_names + ["r_extra"]
+
+
 def test_upsert_partitions_touches_only_named_partitions(spark, tmp_path):
     """Dynamic partition overwrite: rewriting day=2's data must leave
     day=1 and day=3 byte-identical on disk, replace day=2 wholesale,
