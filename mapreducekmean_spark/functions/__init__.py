@@ -1,15 +1,15 @@
 """Engine expression library: vector math and deterministic hashing.
 
-Everything here is built from ``pyspark.sql.functions`` higher-order
-functions — JVM-side, whole-stage-codegen'd, zero Python UDFs — so the
-hot paths (distance kernels over 100 TB of embeddings) never cross the
-Python boundary.
+Everything here is built from ``pyspark.sql.functions`` expressions —
+JVM-side, zero Python UDFs. The higher-order-function folds are
+CodegenFallback (interpreted per element), so the k-means assignment,
+the hottest distance kernel, is numpy instead
+(``operators.kmeans._nearest``).
 """
 
 from mapreducekmean_spark.functions.vector import (
     argmin_index,
     as_double_array,
-    centroid_literal,
     cosine_sim,
     dot,
     l2_norm,
@@ -20,7 +20,6 @@ from mapreducekmean_spark.functions.hashing import md5_of, stable_order_key
 __all__ = [
     "argmin_index",
     "as_double_array",
-    "centroid_literal",
     "cosine_sim",
     "dot",
     "l2_norm",

@@ -64,18 +64,6 @@ def cosine_sim(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def centroid_literal(centroids: Sequence[Sequence[float]]) -> Column:
-    """Embed k collected centroids as a literal ``array<array<double>>``.
-
-    This is the idiomatic replacement for the reference's conf-string
-    smuggling of centroids to map tasks
-    (``KMeans.java:225-229`` write / ``PointsMapper.java:42-54`` read):
-    a constant-folded literal shipped once per executor with the plan —
-    no shuffle, no per-task re-parse.
-    """
-    return F.expr(centroid_literal_sql(centroids))
-
-
 def centroid_literal_sql(centroids: Sequence[Sequence[float]]) -> str:
     """The centroid literal as a SQL expression string.
 

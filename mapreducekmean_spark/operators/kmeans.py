@@ -7,14 +7,25 @@ driver loop ``/root/reference/src/KMeans.java``, map-side assignment
 
 Physical shape of one Lloyd step as the one-step operators declare it
 (``assign``/``centroid_update_wide``/``wssse_per_cluster`` — what Catalyst
-plans from these expressions): ``Scan parquet → Project (codegen'd argmin
-over a constant-folded centroid literal) → HashAggregate(partial) →
-Exchange hashpartitioning(cluster_id) → HashAggregate(final)`` — exactly
-the reference's map → combine → shuffle → reduce pipeline
+plans from these expressions): ``Scan parquet → ArrowEvalPython (the
+nearest-centroid kernel) → HashAggregate(partial) → Exchange
+hashpartitioning(cluster_id) → HashAggregate(final)`` — exactly the
+reference's map → combine → shuffle → reduce pipeline
 (``KMeans.java:207-215``). The iterative driver :func:`lloyd` does NOT
 re-plan this aggregate per iteration; it runs the same math over numpy
-blocks in :func:`fold_loop` (see there for why). Both keep two deliberate
-fixes documented in SURVEY.md §2.1:
+blocks in :func:`fold_loop` (see there for why).
+
+Every assignment — :func:`assign`, the loop's :func:`_block_partials`
+and PQ's per-subspace codes — goes through one numpy kernel,
+:func:`_nearest`. ``assign`` runs it as a scalar Arrow UDF. The Catalyst
+form it replaced, ``transform(centroid literal, c -> aggregate(zip_with
+(...)))``, is CodegenFallback: Spark interprets it once per element.
+Traced on the perfbench ``lloyd`` input (4k rows, k=10, d=64, 4 vCPU)
+it cost 0.14-0.22 s of JVM CPU per assignment, and its 640-double
+literal ~0.05 s more plan analysis per query.
+
+The one-step operators and :func:`lloyd` keep two deliberate fixes
+documented in SURVEY.md §2.1:
 
 - **R8 combiner weighting bug not replicated**: the reference's combiner
   emits unweighted per-split means, so results depend on task split
@@ -26,8 +37,8 @@ fixes documented in SURVEY.md §2.1:
 
 Scale notes: the per-iteration shuffle carries only k×(d sums + count)
 after partial aggregation — independent of input row count, so the plan is
-scan-bound at 100 TB. Centroids travel as a plan literal (constant-folded,
-broadcast with the task binary), never via driver round-trips per task.
+scan-bound at 100 TB. Centroids travel inside the pickled UDF, shipped
+with the task binary, never via driver round-trips per task.
 """
 
 from __future__ import annotations
@@ -35,15 +46,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import partial, reduce
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreducekmean_spark.functions.hashing import stable_order_key
-from mapreducekmean_spark.functions.vector import (
-    argmin_index,
-    as_double_array,
-    centroid_literal_sql,
-)
+from mapreducekmean_spark.functions.vector import as_double_array
 from mapreducekmean_spark.sources import load_table
 
 from mapreducekmean_spark.session import local_rows_df
@@ -147,31 +155,90 @@ def collect_centroids(init_df: DataFrame) -> list[list[float]]:
     return [list(r["emb"]) for r in rows]
 
 
-def with_distances(points: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """Add ``dists: array<double>`` — squared L2 to every centroid.
+def _nearest(X, C):
+    """The nearest-centroid kernel of every k-means assignment: squared
+    L2 from each row of the (n, d) matrix ``X`` to each row of the
+    (k, d) matrix ``C``, and each row's nearest index. Returns
+    ``(dists (n, k), cluster (n,))``.
 
-    R5+R6: the broadcast nested-loop of ``PointsMapper.java:59-81`` as one
-    whole-stage-codegen projection over a constant-folded literal.
+    The distance accumulates one dimension at a time (``acc += diff *
+    diff``, all k centroids at once on the (n, k) array) — the
+    sequential left fold of ``functions/vector.py`` and of the DuckDB
+    oracles, so distances are bit-identical to theirs. The argmin is
+    first-wins like the strict ``<`` compare at
+    ``PointsMapper.java:70-74`` and orders values like Spark's
+    ``array_position(dists, array_min(dists))``: NaN is larger than
+    ``+inf`` (``inf - inf`` in a coordinate makes one), and a row of
+    NaNs goes to index 0.
     """
-    # Single parsed expression (one py4j call) — semantically identical to
-    # F.transform(lit, c -> sq_dist(emb, c)) but without per-lambda driver
-    # round trips; the sequential-fold order matches functions/vector.py.
-    lit_sql = centroid_literal_sql(centroids)
-    return points.withColumn(
-        "dists",
-        F.expr(
-            f"transform({lit_sql}, c -> aggregate("
-            "zip_with(emb, c, (x, y) -> (x - y) * (x - y)), "
-            "0.0D, (acc, v) -> acc + v))"
-        ),
-    )
+    import numpy as np
+
+    dists = np.zeros((X.shape[0], C.shape[0]))
+    with np.errstate(invalid="ignore", over="ignore"):  # inf/NaN are data
+        for d in range(C.shape[1]):
+            diff = X[:, d, None] - C[None, :, d]
+            dists += diff * diff
+    lowest = np.where(np.isnan(dists), np.inf, dists).min(axis=1)
+    return dists, np.argmax(dists == lowest[:, None], axis=1)
 
 
 def assign(points: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """R6 — nearest-centroid assignment; first-wins tie-break mirrors the
-    strict ``<`` compare at ``PointsMapper.java:70-74``."""
-    return with_distances(points, centroids).withColumn(
-        "cluster_id", argmin_index(F.col("dists"))
+    """R5+R6 — nearest-centroid assignment (the broadcast nested loop of
+    ``PointsMapper.java:59-81``): adds ``dists: array<double>``, squared
+    L2 to every centroid, and ``cluster_id``, the first-wins nearest.
+
+    One scalar Arrow UDF (ArrowEvalPython) over :func:`_nearest`: only
+    ``emb`` crosses to the Python worker and only the two new columns
+    come back; every other column stays on the JVM. The centroids ship
+    with the pickled UDF. A row whose ``emb`` is null, holds a null
+    element or is not d long gets k null distances and a null
+    ``cluster_id`` — what the ``zip_with`` fold of
+    ``functions/vector.py`` yields for it."""
+    import numpy as np
+    from pyspark.sql.functions import arrow_udf
+
+    from mapreducekmean_spark.shipping import ship_package
+
+    C = np.asarray(centroids, dtype=np.float64)
+    k, dim = C.shape
+
+    def nearest(emb: pa.Array) -> pa.Array:
+        import pyarrow.compute as pc
+
+        from mapreducekmean_spark.shipping import drop_nested_zip_importers
+
+        drop_nested_zip_importers()  # cheaper setup for this worker's next task
+        n = len(emb)
+        ok = pc.fill_null(pc.list_value_length(emb), -1).to_numpy() == dim
+        flat = pc.list_flatten(emb)
+        rows = pc.list_parent_indices(emb).to_numpy()
+        ok[rows[flat.is_null().to_numpy(zero_copy_only=False)]] = False
+        X = flat.to_numpy(zero_copy_only=False)[ok[rows]]
+        dists = np.zeros((n, k))
+        cluster = np.zeros(n, dtype=np.int64)
+        dists[ok], cluster[ok] = _nearest(X.reshape(int(ok.sum()), dim), C)
+        return pa.StructArray.from_arrays(
+            [
+                pa.ListArray.from_arrays(
+                    pa.array(np.arange(0, n * k + 1, k, dtype=np.int32)),
+                    pa.array(dists.ravel(), mask=np.repeat(~ok, k)),
+                ),
+                pa.array(cluster, mask=~ok),
+            ],
+            names=["dists", "cluster_id"],
+        )
+
+    ship_package(points.sparkSession)  # the UDF pickles _nearest by ref
+    udf = arrow_udf(nearest, "struct<dists: array<double>, cluster_id: bigint>")
+    return (
+        points.withColumn("_nearest", udf(F.col("emb")))
+        .withColumns(
+            {
+                "dists": F.col("_nearest.dists"),
+                "cluster_id": F.col("_nearest.cluster_id"),
+            }
+        )
+        .drop("_nearest")
     )
 
 
@@ -390,24 +457,14 @@ def _numpy_blocks(points: DataFrame):
 
 
 def _block_partials(X, C):
-    """Per-block Lloyd partials: (k×d sums, k counts) of the nearest-
-    centroid assignment of ``X`` against ``C`` — the k-means
-    ``partials`` of :func:`fold_loop`.
-
-    Exactness: squared-L2 accumulates per-dimension (``acc += d*d`` one
-    dimension at a time, all k centroids at once on an (n, k) array),
-    bit-identical to the sequential HOF fold in ``functions/vector.py``;
-    ``argmin`` is first-wins like the strict ``<`` compare at
-    ``PointsMapper.java:70-74``.
-    """
+    """Per-block Lloyd partials: (k×d sums, k counts) of the
+    :func:`_nearest` assignment of ``X`` against ``C`` — the k-means
+    ``partials`` of :func:`fold_loop`, so the loop assigns every point
+    where :func:`assign` does."""
     import numpy as np
 
     k_, dim = C.shape
-    dists = np.zeros((X.shape[0], k_))
-    for d in range(dim):
-        diff = X[:, d, None] - C[None, :, d]
-        dists += diff * diff
-    a = np.argmin(dists, axis=1)
+    a = _nearest(X, C)[1]
     sums = np.zeros((k_, dim))
     counts = np.zeros(k_, dtype=np.int64)
     for j in range(k_):
@@ -466,9 +523,9 @@ def fold_loop(points, state, partials, advance, max_iter):
     Why blocks and not the DataFrame agg: the declared one-step
     operators (``assign_nearest``/``centroid_update``) keep the
     declarative plan, but a *driver loop* re-analyzes that plan every
-    iteration — measured ~208 ms of Catalyst analysis per iteration at
-    fixture scale (the centroid literal changes, so nothing is reused)
-    plus ~250 ms interpreted-HOF execution, ≈0.45 s/iter. The numpy
+    iteration and pays a job per iteration — measured with the former
+    centroid-literal ``assign`` at ~208 ms of Catalyst analysis plus
+    ~250 ms interpreted-HOF execution, ≈0.45 s/iter. The numpy
     block path runs the identical math vectorized with zero
     per-iteration planning: ≈0.21 s/iter measured, same assignments (0
     mismatches over 20 iterations at sf0.1).
@@ -483,7 +540,9 @@ def fold_loop(points, state, partials, advance, max_iter):
     pays a fixed ~120 ms (measured on 4 vCPUs, Python 3.11) in
     ``setup_spark_files``'s ``importlib.invalidate_caches()``, where
     each zipimporter over ``pyspark.zip`` re-reads the archive
-    directory — a cost independent of the task's work.
+    directory — a cost independent of the task's work (cut for a
+    worker's later tasks once :func:`assign` has run in it, see
+    ``shipping.drop_nested_zip_importers``).
 
     Otherwise the blocks are built (:func:`_numpy_blocks`) and cached
     for the loop, and each iteration broadcasts the state and runs one

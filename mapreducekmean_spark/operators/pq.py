@@ -89,32 +89,24 @@ def _fold_add(terms: list[Column]) -> Column:
 
 def _codes_np(X, cb):
     """Per-subspace nearest-code indices for a block: (n, d) float64
-    matrix against the (m, K, ds) codebook array → (n, m) int codes.
-
-    The squared distance accumulates DIMENSION BY DIMENSION (the j
-    loop), vectorized over (rows × codes) — exactly the sequential
-    fold order of the pure-Python oracle in tests/test_pq.py, so the
-    argmin (numpy first-occurrence = first-wins, mirroring
-    ``kmeans.assign``'s strict-< loop) is bit-faithful to it. This is
-    the hot kernel of both training and encoding; it rides the
-    ``kmeans.arrow_blocks`` Arrow machinery rather than a Catalyst
-    expression because both alternatives measured badly at 1M×64
-    (SCALE.md round 7): lambda higher-order functions are
-    CodegenFallback (interpreted per row), and a statically unrolled
-    M×K×ds expression (~4k nodes) blows past janino's method limits
-    into interpreted fallback plus ~70 s of per-query planning."""
+    matrix against the (m, K, ds) codebook array → (n, m) int codes,
+    one ``kmeans._nearest`` call per subspace — the k-means assignment
+    kernel, so distances fold in the same order as the pure-Python
+    oracle in tests/test_pq.py and ties and NaNs resolve as in
+    ``kmeans.assign``. This is the hot kernel of both training and
+    encoding; it rides the ``kmeans.arrow_blocks`` Arrow machinery
+    rather than a Catalyst expression because both alternatives
+    measured badly at 1M×64 (SCALE.md round 7): lambda higher-order
+    functions are CodegenFallback (interpreted per row), and a
+    statically unrolled M×K×ds expression (~4k nodes) blows past
+    janino's method limits into interpreted fallback plus ~70 s of
+    per-query planning."""
     import numpy as np
 
-    m, k, ds = cb.shape
-    n = X.shape[0]
-    codes = np.empty((n, m), dtype=np.int64)
+    m, _k, ds = cb.shape
+    codes = np.empty((X.shape[0], m), dtype=np.int64)
     for s in range(m):
-        xs = X[:, s * ds : (s + 1) * ds]
-        d = np.zeros((n, k))
-        for j in range(ds):
-            diff = xs[:, j : j + 1] - cb[s, :, j][None, :]
-            d = d + diff * diff
-        codes[:, s] = np.argmin(d, axis=1)
+        codes[:, s] = km._nearest(X[:, s * ds : (s + 1) * ds], cb[s])[1]
     return codes
 
 

@@ -10,8 +10,8 @@ coarse quantizer reuses the deterministic K-Means init
 Scale design:
 - Brute force is O(n·q): fine for a query batch against a broadcast side,
   wrong as n grows — it exists as the recall-1.0 baseline.
-- IVF: points are bucketed once by nearest coarse centroid (narrow
-  projection over a constant-folded literal, like the K-Means assign);
+- IVF: points are bucketed once by nearest coarse centroid (the K-Means
+  ``assign``: one Arrow UDF over the shared numpy kernel, no shuffle);
   each query probes ``nprobe`` cells, so the candidate join touches
   ~nprobe/k of the data instead of all of it. At 100 TB the cell id
   becomes a partition column and probing is partition pruning.
@@ -541,16 +541,12 @@ def _append_cells(
     )
     if not head:
         return  # nothing to append
-    max_id, max_emb = int(head[0]["vec_id"]), list(head[0]["emb"])
-    # km.assign's sequential-fold distance and first-wins tie-break, so
-    # the probe looks in the cell the append would write
-    max_cell = min(
-        range(len(cents)),
-        key=lambda i: (
-            sum((a - b) * (a - b) for a, b in zip(max_emb, cents[i])),
-            i,
-        ),
-    )
+    import numpy as np
+
+    max_id = int(head[0]["vec_id"])
+    # km.assign's kernel, so the probe looks in the cell the append writes
+    emb = np.array([head[0]["emb"]], dtype=np.float64)
+    max_cell = int(km._nearest(emb, np.asarray(cents))[1][0])
     if (
         spark.read.parquet(f"{path}/cells")
         .filter((F.col("cell") == max_cell) & (F.col("vec_id") == max_id))

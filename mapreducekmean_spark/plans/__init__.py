@@ -3,7 +3,7 @@ designed for (broadcasts where intended, filters pushed to the parquet
 scan, no gratuitous exchanges, whole-stage codegen on the hot paths).
 
 This is the engine's scale-guardrail: the SURVEY §4 design claims
-("assignment is a shuffle-free codegen'd projection", "dims broadcast",
+("assignment is shuffle-free", "dims broadcast",
 "aggregation is partial+final") are tested facts, not comments.
 """
 

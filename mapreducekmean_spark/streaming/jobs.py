@@ -112,9 +112,9 @@ def _drain(
 def stream_assign(
     points_stream: DataFrame, centroids: list[list[float]]
 ) -> DataFrame:
-    """Streaming model scoring: the same constant-folded nearest-centroid
-    projection as the batch path (``KMeansModel.transform`` analogue) —
-    stateless, so it runs identically per micro-batch."""
+    """Streaming model scoring: the same nearest-centroid Arrow UDF as
+    the batch path (``KMeansModel.transform`` analogue) — stateless, so
+    it runs identically per micro-batch."""
     return assign(points_stream, centroids).select("vec_id", "cluster_id")
 
 
@@ -280,7 +280,8 @@ class StreamingKMeans:
 
     Per micro-batch: assign each point to its nearest current centroid
     with the SAME oracle-checked kernel as the batch path
-    (``operators.kmeans.assign`` — broadcast literal, codegen'd argmin),
+    (``operators.kmeans.assign`` — the shared numpy nearest-centroid
+    kernel as one Arrow UDF),
     aggregate per-cluster (sum, count) — one exchange of k×(d+1) values
     — and fold into the running model with count-weighted means and an
     optional decay factor (the classic streaming/mini-batch update rule;

@@ -88,7 +88,7 @@ def test_assign_nan_free_distances(spark):
     from mapreducekmean_spark.operators import kmeans as km
 
     pts = spark.createDataFrame([Row(vec_id=1, emb=[1e300, -1e300])])
-    out = km.with_distances(pts, [[0.0, 0.0]]).select(
+    out = km.assign(pts, [[0.0, 0.0]]).select(
         F.element_at("dists", 1).alias("d")
     ).first()
     assert out.d == float("inf")  # overflow → inf, not NaN

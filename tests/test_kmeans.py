@@ -192,6 +192,86 @@ def test_block_partials_match_loop_and_assign(spark):
         assert np.array_equal(got[1], want[1])
 
 
+def _lambda_assign(points, cents):
+    """The Catalyst form ``assign`` had before its numpy kernel: the
+    centroid literal, one ``aggregate(zip_with(...))`` fold per centroid
+    and ``array_position(dists, array_min(dists)) - 1``."""
+    from mapreducekmean_spark.functions.vector import (
+        argmin_index,
+        centroid_literal_sql,
+    )
+
+    return points.withColumn(
+        "dists",
+        F.expr(
+            f"transform({centroid_literal_sql(cents)}, c -> aggregate("
+            "zip_with(emb, c, (x, y) -> (x - y) * (x - y)), "
+            "0.0D, (acc, v) -> acc + v))"
+        ),
+    ).withColumn("cluster_id", argmin_index(F.col("dists")))
+
+
+def _nan_key(v):
+    """A value that compares NaN equal to NaN, recursively."""
+    if isinstance(v, list):
+        return [_nan_key(x) for x in v]
+    return "NaN" if isinstance(v, float) and math.isnan(v) else v
+
+
+def test_assign_matches_lambda_reference(spark):
+    """``assign`` (one Arrow UDF over ``_nearest``) returns exactly the
+    lambda form's ``dists`` and ``cluster_id``: random points, an exact
+    tie, null/short/null-element embeddings (k null distances, null
+    cluster), an infinite coordinate and a NaN centroid component."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    inf, nan = float("inf"), float("nan")
+    odd = [[1.0, 0.0], None, [1.0], [1.0, None], [inf, 0.0], [0.0, 0.0]]
+    cases = [
+        (rng.normal(size=(300, 16)).tolist(), rng.normal(size=(7, 16)).tolist()),
+        (odd, [[0.0, 0.0], [2.0, 0.0], [10.0, 10.0]]),  # [1, 0] ties 0 and 1
+        (odd, [[nan, 0.0], [5.0, 0.0]]),
+        (odd, [[inf, 0.0], [5.0, 0.0]]),
+    ]
+    for pts, cents in cases:
+        df = spark.createDataFrame(
+            list(enumerate(pts)), "vec_id bigint, emb array<double>"
+        )
+
+        def rows(frame):
+            return [
+                (r.vec_id, _nan_key(r.dists), r.cluster_id)
+                for r in frame.orderBy("vec_id").collect()
+            ]
+
+        got, want = rows(km.assign(df, cents)), rows(_lambda_assign(df, cents))
+        assert got == want
+    assert [r[2] for r in got] == [1, None, None, None, 1, 1]
+    assert got[1][1] == [None, None]
+
+
+@pytest.mark.parametrize("c0", [float("nan"), float("inf")])
+def test_nan_distance_assigns_like_assign(spark, c0):
+    """A NaN distance (a NaN centroid component, or ``inf - inf``) orders
+    above ``+inf`` in the Lloyd loop and in PQ codes, as in ``assign``'s
+    ``array_min``: every point here goes to centroid 1."""
+    import numpy as np
+
+    from mapreducekmean_spark.operators import pq
+
+    pts = [[0.0, 0.0], [1.0, 0.0], [float("inf"), 0.0]]
+    df = spark.createDataFrame(
+        list(enumerate(pts)), "vec_id bigint, emb array<double>"
+    )
+    cents = [[c0, 0.0], [5.0, 0.0]]
+    sizes = dict(km.cluster_sizes(km.assign(df, cents)).collect())
+    assert sizes == {1: 3}
+    X, C = np.array(pts), np.array(cents)
+    assert km._block_partials(X, C)[1].tolist() == [0, 3]
+    assert pq._codes_np(X, C[None]).ravel().tolist() == [1, 1, 1]
+
+
 def test_golden_centroids_sf0001(points):
     """Seeded/deterministic run frozen into a golden file (SURVEY §5.5)."""
     result = km.lloyd(points, k=10)

@@ -15,11 +15,15 @@ REG = registry()
 
 
 def test_assign_nearest_is_shuffle_free(spark, sf_small):
-    """R6 assignment must be a pure projection over the scan: the centroid
-    literal is constant-folded, so there is no join and no exchange."""
+    """R6 assignment must be a narrow pass over the scan: the centroids
+    ship inside the one nearest-centroid Arrow UDF, so there is no join
+    and no exchange, and the projections around it stay codegen'd."""
+    import re
+
     df = REG["assign_nearest"].fn(spark, sf_small)
     assert count_exchanges(df) == 0
     assert has_wholestage_codegen(df)
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", _plan(df), re.M)) == 1
 
 
 def test_centroid_update_single_shuffle(spark, sf_small):
@@ -254,8 +258,8 @@ def test_q22_anti_join_with_pushed_date(spark, sf_small):
 
 def test_dedup_semantic_single_shuffle_per_stage(spark, sf_small):
     """Semantic dedup must stay cell-bucketed: the only wide operations
-    are the cell-assignment projection (shuffle-free, constant-folded
-    centroids) feeding ONE exchange into the per-cell applyInPandas —
+    are the cell assignment (shuffle-free, the centroids shipped in its
+    Arrow UDF) feeding ONE exchange into the per-cell applyInPandas —
     never an all-pairs join."""
     df = REG["dedup_semantic"].fn(spark, sf_small)
     plan = _plan(df)
